@@ -132,84 +132,6 @@ def test_bpe_encode_null_and_empty(spark):
     assert rows[100]["round_trip_ok"] is None  # NULL text passes through
 
 
-def test_bpe_distributed_counts_match_driver_tokenization(spark):
-    """bpe_word_counts' regexp_extract_all replays _PRETOKEN_RE exactly
-    (words AND whitespace runs, full partition of the text)."""
-    from collections import Counter
-
-    from uma_etl_iis_loader_spark.functions.bpe import (
-        _PRETOKEN_RE,
-        bpe_word_counts,
-    )
-
-    # includes UNICODE whitespace (NBSP, thin space, line separator):
-    # Java's bare \s is ASCII-only, so without (?U) in the JVM pattern
-    # these partition differently than Python's _PRETOKEN_RE and the
-    # counts-trained merges silently diverge from encode tokenization
-    texts = [
-        "the cat  sat\n\ton the mat",
-        "thé café ",
-        " ",
-        "",
-        "nbsp\u00a0split and\u2009thin",
-        "line\u2028sep\u00a0\u2009run",
-        # U+001C-U+001F (FS/GS/RS/US): Python's bare \s matches them,
-        # Java's (?U)\s (White_Space property) does NOT \u2014 _PRETOKEN_RE
-        # pins to the Java class, so these glom into the adjacent
-        # non-space runs on BOTH sides (the residual-gap fix)
-        "fs\x1cgs\x1drs\x1eus\x1f end",
-        "\x1c\x1d lead and trail \x1e\x1f",
-    ]
-    expect: Counter = Counter()
-    for t in texts:
-        expect.update(_PRETOKEN_RE.findall(t))
-    docs = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = {r["word"]: r["n"] for r in bpe_word_counts(docs).collect()}
-    assert got == dict(expect)
-
-
-def test_bpe_update_counts_equals_recount_law(spark):
-    """LAW: folding shard B into counts(A) == counting A∪B directly —
-    rows exactly equal; and training from either yields the same merge
-    table (the update_char_lm mergeable-statistic contract)."""
-    from uma_etl_iis_loader_spark.functions.bpe import (
-        bpe_word_counts,
-        train_bpe_from_counts,
-        update_bpe_counts,
-    )
-
-    a = _docs(spark, ["the cat sat on the mat", "the dog sat"])
-    b = _docs(spark, ["the cat ran to the dog", "a mat on the mat"])
-    both = a.unionByName(b)
-    merged = update_bpe_counts(bpe_word_counts(a), b)
-    direct = bpe_word_counts(both)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-    assert train_bpe_from_counts(merged, vocab_size=300) == \
-        train_bpe_from_counts(direct, vocab_size=300)
-
-
-def test_bpe_train_from_counts_equals_full_sample_train(spark, sf_dir):
-    """Corpus-exact parity: with the driver sample covering the whole
-    corpus and no char cap, train_bpe == train_bpe_from_counts (both
-    reduce to the same word_freq, and the merge loop is shared)."""
-    from uma_etl_iis_loader_spark.functions.bpe import (
-        bpe_word_counts,
-        train_bpe_from_counts,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(64)
-    full_sample = train_bpe(
-        docs, vocab_size=320, sample_rows=10_000,
-        max_chars_per_doc=10_000_000,
-    )
-    from_counts = train_bpe_from_counts(
-        bpe_word_counts(docs), vocab_size=320
-    )
-    assert full_sample == from_counts and len(from_counts) > 0
-
-
 def test_bpe_encode_string_ids(spark):
     # id column type is derived from the input schema — string ids
     # must survive (hard-coded `long` used to fail at runtime)
@@ -230,12 +152,3 @@ def test_bpe_encode_zero_shuffles(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
-
-
-def test_merges_save_load_round_trip(tmp_path):
-    from uma_etl_iis_loader_spark.functions.bpe import load_merges, save_merges
-
-    merges = [(b"t", b"h"), (b"th", b"e"), (b"\xc3\xa9", b" ")]
-    p = str(tmp_path / "merges.json")
-    save_merges(merges, p)
-    assert load_merges(p) == merges

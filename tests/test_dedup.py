@@ -102,40 +102,54 @@ def _docs_with_empties(spark):
     )
 
 
+def _join_verify_pairs(docs, num_hashes, bands, n, threshold, char_level):
+    """Reference verify for :func:`minhash_lsh_pairs`: the classic
+    candidates-then-gram-join pipeline. Every (band, bucket) collision
+    becomes a candidate pair, both gram arrays join in, and exact
+    Jaccard filters; two zero-gram docs (sentinel-signature collision)
+    yield 0/0 → NULL and drop."""
+    from uma_etl_iis_loader_spark.operators.dedup import (
+        _band_entries,
+        minhash_signature,
+    )
+
+    sigs = minhash_signature(docs, "doc_id", "text", num_hashes, n, char_level)
+    banded = _band_entries(sigs, bands, num_hashes // bands)
+    la, lb = banded.alias("a"), banded.alias("b")
+    candidates = (
+        la.join(lb, ["band", "bucket"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    ga = sigs.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
+    gb = sigs.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
+    jac = F.try_divide(
+        F.size(F.array_intersect("grams_a", "grams_b")),
+        F.size(F.array_union("grams_a", "grams_b")),
+    )
+    return {
+        (r.id_a, r.id_b)
+        for r in candidates.join(ga, "id_a")
+        .join(gb, "id_b")
+        .filter(jac >= threshold)
+        .select("id_a", "id_b")
+        .collect()
+    }
+
+
 def test_minhash_lsh_grouped_equals_join_verify(spark):
-    """LAW: the grouped (per-bucket Arrow kernel) and join (candidate
-    pair join) verify strategies emit the IDENTICAL pair set — including
-    on zero-gram docs, where grouped filters the sentinel bucket before
-    bucketing and join drops the same pairs via 0/0→NULL Jaccard."""
+    """LAW: the per-bucket Arrow verify kernel emits the IDENTICAL pair
+    set as the reference candidate-pair join — including on zero-gram
+    docs, where the kernel filters the sentinel bucket before bucketing
+    and the join drops the same pairs via 0/0→NULL Jaccard."""
     docs = _docs_with_empties(spark)
     kw = dict(num_hashes=64, bands=16, n=5, threshold=0.5, char_level=True)
-    grouped = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, verify="grouped", **kw).collect()
-    }
-    join = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, verify="join", **kw).collect()
-    }
+    grouped = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, **kw).collect()}
+    join = _join_verify_pairs(docs, **kw)
     assert grouped == join and len(grouped) > 0
     # no sentinel pairs: empty docs never pair under either strategy
     assert all(a < 7 and b < 7 for a, b in grouped)
-
-
-def test_minhash_lsh_sig_margin_preserves_pairs(spark):
-    """The estimate-first cascade with a generous margin (0.35 → false-
-    negative bound exp(-2·0.35²·64) ≈ 1e-7 per pair) emits the same
-    pair set as the exhaustive verify."""
-    docs = _docs(spark)
-    kw = dict(num_hashes=64, bands=16, n=5, threshold=0.5, char_level=True)
-    base = {
-        (r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, **kw).collect()
-    }
-    casc = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, sig_margin=0.35, **kw).collect()
-    }
-    assert casc == base
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
@@ -145,7 +159,7 @@ def _persistent_rdd_ids(spark) -> set[int]:
 
 def test_minhash_lsh_pin_releases_both_caches(spark):
     """pin=True must unpersist BOTH internal caches (signature frame +
-    grouped-mode collision-stats frame): the only NEW persisted RDD
+    collision-stats frame): the only NEW persisted RDD
     after the call is the localCheckpoint of the pair output itself.
     pin=False leaves both persisted (the lazy plan references them) —
     documented cache-lifetime contract in the docstring.
@@ -170,78 +184,34 @@ def test_minhash_lsh_pin_releases_both_caches(spark):
     spark.catalog.clearCache()  # the documented release path
 
 
-def test_minhash_lsh_chained_subset_and_closure(spark):
-    """Representative chaining above max_bucket: (a) chained pairs ⊆
-    unbounded pairs (never a false positive), (b) on a duplicate FAMILY
-    (one bucket, all pairs qualify) the star edges reach every member,
-    so connected_components restores the family cluster exactly."""
-    from uma_etl_iis_loader_spark.operators.dedup import (
-        connected_components,
-    )
-
-    # a 10-copy family (identical docs: every pair J=1.0) + distinct noise
-    rows = [(i, BASE) for i in range(1, 11)] + [
-        (11, "unrelated words about columnar storage and row groups"),
-        (12, "another distinct text mentioning adaptive query execution"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(num_hashes=64, bands=16, n=5, threshold=0.5, char_level=True)
-    full = minhash_lsh_pairs(docs, **kw)
-    chained = minhash_lsh_pairs(docs, max_bucket=4, **kw)
-    sf = {(r.id_a, r.id_b) for r in full.collect()}
-    sc = {(r.id_a, r.id_b) for r in chained.collect()}
-    assert sc <= sf
-    assert len(sc) < len(sf)  # the family bucket really chained (9 < 45)
-    comp_full = {(r.node, r.comp) for r in connected_components(full).collect()}
-    comp_chained = {
-        (r.node, r.comp) for r in connected_components(chained).collect()
-    }
-    assert comp_full == comp_chained
-
-
 def test_minhash_lsh_candidate_budget_guard(spark):
     """max_candidate_pairs raises BEFORE verify work with the measured
-    mass and the banding recipe; a sufficient budget (and the chaining-
-    adjusted mass) passes. Covers both verify strategies."""
+    mass and the banding recipe; a sufficient budget passes."""
     import pytest
 
     docs = _docs(spark)
     kw = dict(num_hashes=64, bands=16, n=5, threshold=0.5, char_level=True)
-    for strategy in ("grouped", "join"):
-        with pytest.raises(RuntimeError, match="16 bands x 4 rows"):
-            minhash_lsh_pairs(
-                docs, verify=strategy, max_candidate_pairs=1, **kw
-            )
+    with pytest.raises(RuntimeError, match="16 bands x 4 rows"):
+        minhash_lsh_pairs(docs, max_candidate_pairs=1, **kw)
     # generous budget: runs to completion
     assert (
         minhash_lsh_pairs(docs, max_candidate_pairs=10_000, **kw).count() > 0
     )
-    # chaining ceiling shrinks the budgeted mass: a 10-copy family is
-    # 45 pairs/bucket unbounded but 9 with max_bucket=4 — a budget
-    # between the two passes only with chaining accounted
+    # a 10-copy family is 45 pairs in each of its 16 band buckets: 720
     fam = spark.createDataFrame(
         [(i, BASE) for i in range(1, 11)], "doc_id long, text string"
     )
-    with pytest.raises(RuntimeError, match="candidate budget exceeded"):
+    with pytest.raises(RuntimeError, match="720 candidate pairs"):
         minhash_lsh_pairs(fam, max_candidate_pairs=200, **kw)
-    assert (
-        minhash_lsh_pairs(
-            fam, max_candidate_pairs=200, max_bucket=4, **kw
-        ).count()
-        > 0
-    )
 
 
-def test_lsh_bucket_stats_predict_candidate_pairs(spark, tmp_path):
+def test_lsh_bucket_stats_predict_candidate_pairs(spark):
     """The telemetry's candidate_pairs equals the pair join's actual
-    pre-distinct candidate volume (Σ n·(n−1)/2 over colliding buckets),
-    identical docs land in one bucket per band, and the persisted-index
-    face agrees with the from-docs face."""
+    pre-distinct candidate volume (Σ n·(n−1)/2 over colliding buckets)
+    and identical docs land in one bucket per band."""
     from uma_etl_iis_loader_spark.operators.dedup import (
-        build_minhash_index,
         lsh_bucket_balance,
         lsh_bucket_stats,
-        lsh_index_bucket_stats,
     )
 
     docs = _docs(spark)
@@ -266,23 +236,12 @@ def test_lsh_bucket_stats_predict_candidate_pairs(spark, tmp_path):
     )
     assert bal["candidate_pairs"] == raw
 
-    # persisted-index face matches (index built from the same corpus,
-    # char-level 5-grams are not the index default -> pass explicitly)
-    idx = str(tmp_path / "lshidx")
-    build_minhash_index(docs, idx, num_hashes=64, bands=16, n=5,
-                        char_level=True)
-    bal2 = lsh_bucket_balance(lsh_index_bucket_stats(spark, idx))
-    assert bal2 == bal
-
-    # bounded accounting: a 10-copy family fills one size-10 bucket per
-    # band; with ceiling 4 each counts 9 chain comparisons, not 45 —
-    # the same arithmetic the in-operator budget guard applies
+    # a 10-copy family fills one size-10 bucket per band: 45 pairs each
     fam = spark.createDataFrame(
         [(i, BASE) for i in range(1, 11)], "doc_id long, text string"
     )
     fs = lsh_bucket_stats(fam, **kw)
     assert lsh_bucket_balance(fs)["candidate_pairs"] == 16 * 45
-    assert lsh_bucket_balance(fs, max_bucket=4)["candidate_pairs"] == 16 * 9
 
 
 def test_simhash_flags_exact_and_near(spark):
@@ -498,131 +457,6 @@ def test_connected_components_string_ids(spark):
     )
     kept = sorted(r.doc_id for r in deduplicate_corpus(docs, pairs).collect())
     assert kept == ["aa", "xx", "zz"]
-
-
-def test_incremental_index_parity_and_idempotence(spark, sf_dir, tmp_path):
-    """Persisted-index incremental dedup: (1) pair recall parity — the
-    incremental run's pairs restricted to (old,new)+(new,new) equal the
-    batch LSH run's pairs over the full corpus (same seeded hash family,
-    same banding); (2) idempotence — re-incrementing the same shard finds
-    every doc a dup of the corpus copy, zero survivors."""
-    from uma_etl_iis_loader_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_increment,
-        minhash_lsh_pairs,
-    )
-
-    docs = read_fixture(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") < 250)
-    new = docs.filter(F.col("doc_id") >= 250)
-    idx = str(tmp_path / "lsh_index")
-    kw = dict(num_hashes=64, bands=16, n=3, char_level=False)
-
-    build_minhash_index(old, idx, **kw)
-    out = dedup_increment(new, idx, threshold=0.35, **kw)
-
-    batch = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, threshold=0.35, **kw).collect()
-    }
-    batch_old_new = {(a, b) for a, b in batch if a < 250 <= b}
-    batch_new_new = {(a, b) for a, b in batch if a >= 250}
-    got_old = {
-        (min(r.id_old, r.id_new), max(r.id_old, r.id_new))
-        for r in out["pairs_old"].collect()
-    }
-    got_new = {(r.id_a, r.id_b) for r in out["pairs_new"].collect()}
-    assert got_old == batch_old_new
-    assert got_new == batch_new_new
-
-    # survivor contract: dropped ⇔ has a corpus match or a smaller-id
-    # shard match
-    dropped = {b for _, b in got_new} | {max(a, b) for a, b in got_old}
-    surv = {r.doc_id for r in out["survivors"].collect()}
-    new_ids = {r.doc_id for r in new.select("doc_id").collect()}
-    assert surv == new_ids - dropped
-
-    # idempotence: the survivors were appended to the index, so the same
-    # shard re-incremented (without re-appending) dies entirely
-    again = dedup_increment(new, idx, threshold=0.35, update_index=False, **kw)
-    assert again["survivors"].count() == 0
-
-
-def test_dedup_increment_telemetry_counts_colliding_buckets_only(spark):
-    """The ingest guard's n_buckets telemetry matches the batch guard's
-    colliding-bucket semantics: singleton shard buckets with zero
-    candidate mass (no index collision, <2 shard members) are excluded.
-    A shard of one index-dup + two distinct docs must report at most
-    `bands` buckets (the dup's collisions), not every shard (band,
-    bucket) group."""
-    import tempfile
-
-    from uma_etl_iis_loader_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_increment,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    corpus = spark.createDataFrame(
-        [(0, base)], "doc_id long, text string"
-    )
-    shard = spark.createDataFrame(
-        [
-            (10, base),  # exact dup of the indexed doc: collides per band
-            (11, "completely unrelated first text about gardening tools"),
-            (12, "another disjoint document discussing maritime law"),
-        ],
-        "doc_id long, text string",
-    )
-    idx = tempfile.mkdtemp(prefix="dedup_telem_") + "/idx"
-    kw = dict(num_hashes=16, bands=4, n=3, char_level=False)
-    build_minhash_index(corpus, idx, **kw)
-    out = dedup_increment(
-        shard, idx, threshold=0.5, update_index=False,
-        max_candidate_pairs=10_000, **kw
-    )
-    t = out["telemetry"]
-    # the dup collides in every band (identical text -> identical
-    # signature); the two distinct docs' singleton buckets contribute
-    # zero mass and must not inflate the count
-    assert t["candidate_mass"] >= 4
-    assert 1 <= t["n_buckets"] <= 4  # never the ~12 total shard groups
-    assert t["max_new"] >= 1 and t["max_old"] >= 1
-
-
-def test_dedup_increment_fails_loudly_on_bands_without_grams(spark):
-    """A band entry whose id has no gram row means the index's two tables
-    diverged (external corruption — the grams-first write order cannot
-    produce it). The verify join must raise, not silently drop the
-    candidate and wave the duplicate through."""
-    import tempfile
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_increment,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"the quick brown fox document number {i} with shared words")
-         for i in range(5)],
-        "doc_id long, text string",
-    )
-    idx = tempfile.mkdtemp(prefix="dedup_corrupt_") + "/idx"
-    kw = dict(num_hashes=16, bands=4, n=3, char_level=False)
-    build_minhash_index(docs, idx, **kw)
-    # corrupt: clone every band entry under a phantom id with no gram row
-    bands = spark.read.parquet(f"{idx}/bands")
-    bands.withColumn("id", F.col("id") + 10_000).write.mode(
-        "append"
-    ).partitionBy("band").parquet(f"{idx}/bands")
-
-    with pytest.raises(Exception, match="LSH index corrupt"):
-        dedup_increment(
-            docs, idx, threshold=0.35, update_index=False, **kw
-        )["pairs_old"].count()
 
 
 def test_semantic_dedup_planted_near_dups(spark, sf_dir):

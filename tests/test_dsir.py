@@ -227,9 +227,12 @@ def test_dsir_select_safe_for_negative_and_huge_ids(spark):
 
 
 def test_dsir_update_equals_refit_law(spark):
-    import pandas as pd
-
-    from uma_etl_iis_loader_spark.operators.dsir import update_dsir
+    """Shard additivity of ``fit_dsir``: the model is a pure function of
+    its (feat, ct, cr) counts, and those counts are additive over
+    shards — so summing the counts of per-shard fits and deriving the
+    model from the sum scores exactly like a refit on the
+    concatenation."""
+    from uma_etl_iis_loader_spark.operators.dsir import _derive_model
 
     raw, target = _corpora(spark)
     raw1 = raw.filter("doc_id <= 2")
@@ -239,12 +242,23 @@ def test_dsir_update_equals_refit_law(spark):
             {"doc_id": [103], "text": ["season the broth and stir"]}
         )
     )
-    # fold a raw shard, then a target shard, into the shard-1 model
-    m_inc = update_dsir(
-        update_dsir(fit_dsir(raw1, target), new_raw_docs=raw2),
-        new_target_docs=extra_t,
+    # shard 1 = (raw1, target); shard 2 = (raw2, extra_t)
+    m1 = fit_dsir(raw1, target)
+    m2 = fit_dsir(raw2, extra_t)
+    merged = (
+        m1["counts"].unionByName(m2["counts"])
+        .groupBy("feat")
+        .agg(F.sum("ct").alias("ct"), F.sum("cr").alias("cr"))
     )
+    m_inc = _derive_model(merged, m1["num_buckets"])
     m_full = fit_dsir(raw, target.unionByName(extra_t))
+    counts_inc = {
+        r["feat"]: (r["ct"], r["cr"]) for r in merged.collect()
+    }
+    counts_full = {
+        r["feat"]: (r["ct"], r["cr"]) for r in m_full["counts"].collect()
+    }
+    assert counts_inc == counts_full
     score_inc = {
         r["doc_id"]: (r["n_feats"], r["logw_q4"])
         for r in dsir_log_weights(raw, m_inc).collect()
@@ -254,10 +268,6 @@ def test_dsir_update_equals_refit_law(spark):
         for r in dsir_log_weights(raw, m_full).collect()
     }
     assert score_inc == score_full and len(score_inc) == 4
-    # no-op update returns the model unchanged
-    from uma_etl_iis_loader_spark.operators.dsir import update_dsir as u
-
-    assert u(m_inc) is m_inc
 
 
 def test_dsir_feature_count_law_random_corpus(spark):
@@ -284,97 +294,3 @@ def test_dsir_feature_count_law_random_corpus(spark):
         w = words[r["doc_id"]]
         assert r["n_feats"] == 2 * w - 1
         assert r["logw_q4"] is not None
-
-
-def test_dsir_model_save_load_round_trip(spark, tmp_path):
-    raw, target = _corpora(spark)
-    from uma_etl_iis_loader_spark.operators.dsir import (
-        load_dsir_model,
-        save_dsir_model,
-        update_dsir,
-    )
-
-    model = fit_dsir(raw, target)
-    p = str(tmp_path / "dsir_model")
-    save_dsir_model(model, p)
-    loaded = load_dsir_model(spark, p)
-    a = {
-        r["doc_id"]: (r["n_feats"], r["logw_q4"])
-        for r in dsir_log_weights(raw, model).collect()
-    }
-    b = {
-        r["doc_id"]: (r["n_feats"], r["logw_q4"])
-        for r in dsir_log_weights(raw, loaded).collect()
-    }
-    assert a == b
-    # the persisted counts keep the incremental path alive:
-    # update(loaded) == refit on the concatenation
-    import pandas as pd
-
-    extra = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [50], "text": ["stir the sauce again"]})
-    )
-    inc = {
-        r["doc_id"]: r["logw_q4"]
-        for r in dsir_log_weights(
-            raw, update_dsir(loaded, new_raw_docs=extra)
-        ).collect()
-    }
-    full = {
-        r["doc_id"]: r["logw_q4"]
-        for r in dsir_log_weights(
-            raw, fit_dsir(raw.unionByName(extra), target)
-        ).collect()
-    }
-    assert inc == full
-    # the maintenance flow: load -> update -> save back to the SAME
-    # path (the staged swap makes this safe even though the merged
-    # plan reads the path being replaced)
-    save_dsir_model(update_dsir(loaded, new_raw_docs=extra), p)
-    resaved = {
-        r["doc_id"]: r["logw_q4"]
-        for r in dsir_log_weights(raw, load_dsir_model(spark, p)).collect()
-    }
-    assert resaved == full
-
-
-def test_dsir_stream_scoring_equals_batch_and_replay(spark, tmp_path):
-    import pandas as pd
-
-    from uma_etl_iis_loader_spark.operators.dsir import save_dsir_model
-    from uma_etl_iis_loader_spark.streaming.cdc import DsirScoreMaintainer
-
-    raw, target = _corpora(spark)
-    model_p = str(tmp_path / "model")
-    save_dsir_model(fit_dsir(raw, target), model_p)
-
-    src = str(tmp_path / "incoming")
-    raw.repartition(2).write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "scores")
-    m = DsirScoreMaintainer(model_p, out)
-    q = m.attach(
-        spark.readStream.schema(raw.schema).parquet(src),
-        str(tmp_path / "ckpt"),
-    ).start()
-    q.awaitTermination(120)
-
-    got = {
-        r["doc_id"]: (r["n_feats"], r["logw_q4"])
-        for r in spark.read.parquet(out).collect()
-    }
-    from uma_etl_iis_loader_spark.operators.dsir import load_dsir_model
-
-    batch = {
-        r["doc_id"]: (r["n_feats"], r["logw_q4"])
-        for r in dsir_log_weights(
-            raw, load_dsir_model(spark, model_p)
-        ).collect()
-    }
-    assert got == batch
-    # replaying a batch id rewrites identical content — no duplication
-    m.apply_batch(raw, 0)
-    again = {
-        r["doc_id"]: (r["n_feats"], r["logw_q4"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == batch

@@ -91,18 +91,41 @@ def test_lm_join_is_broadcast_no_driver_collect(spark, sf_dir):
 
 
 def test_lm_incremental_update_equals_retrain(spark):
-    from uma_etl_iis_loader_spark.operators.lm import update_char_lm
+    """Shard additivity of ``train_char_lm``: folding a second shard's
+    model into the first one's (trigram counts summed by gram, context
+    counts re-derived from them, char vocabulary distinct-unioned) gives
+    exactly the model trained on the concatenation, and scoring through
+    either is identical."""
+    from pyspark.sql import functions as F
 
     shard1 = _docs(spark, ["ababa", "hello world"], ids=[0, 1])
     shard2 = _docs(spark, ["world peace", "zzz qqq"], ids=[2, 3])
     both = shard1.unionByName(shard2)
 
-    incremental = update_char_lm(train_char_lm(shard1), shard2)
+    m1 = train_char_lm(shard1)
+    m2 = train_char_lm(shard2, max_chars=m1["max_chars"])
+    tri = (
+        m1["tri"].unionByName(m2["tri"])
+        .groupBy("gram").agg(F.sum("c_tri").alias("c_tri"))
+    )
+    chars = m1["chars"].unionByName(m2["chars"]).distinct()
+    incremental = {
+        "tri": tri,
+        "ctx": tri.groupBy(F.substring("gram", 1, 2).alias("ctx")).agg(
+            F.sum("c_tri").alias("c_ctx")
+        ),
+        "chars": chars,
+        "vocab": chars.agg(F.count(F.lit(1)).alias("v")),
+        "max_chars": m1["max_chars"],
+    }
     retrained = train_char_lm(both)
 
     tri_inc = {r["gram"]: r["c_tri"] for r in incremental["tri"].collect()}
     tri_ret = {r["gram"]: r["c_tri"] for r in retrained["tri"].collect()}
     assert tri_inc == tri_ret
+    ctx_inc = {r["ctx"]: r["c_ctx"] for r in incremental["ctx"].collect()}
+    ctx_ret = {r["ctx"]: r["c_ctx"] for r in retrained["ctx"].collect()}
+    assert ctx_inc == ctx_ret
     assert (
         incremental["vocab"].collect()[0]["v"]
         == retrained["vocab"].collect()[0]["v"]

@@ -76,137 +76,6 @@ def test_within_doc_repeats_do_not_count(spark):
     assert out["spans"].count() == 0  # repeats only within doc 1
 
 
-def test_passages_increment_matches_batch(spark, sf_dir):
-    """Parity law: incrementing a shard against the corpus index equals
-    the batch operator over corpus ∪ shard RESTRICTED to shard docs
-    (document sets are disjoint, so combined distinct-doc counts
-    coincide)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.passages import (
-        build_shingle_index,
-        passages_increment,
-    )
-
-    docs = read_fixture(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") < 300)
-    shard = docs.filter(F.col("doc_id") >= 300)
-
-    idx = tempfile.mkdtemp(prefix="shingle_idx_") + "/idx"
-    build_shingle_index(corpus, idx, k=8)
-    inc = passages_increment(shard, idx, k=8, update_index=False)
-
-    batch = repeated_passages(docs, k=8, hashed=True)
-    shard_ids = {r.doc_id for r in shard.select("doc_id").collect()}
-    for part in ("stats", "spans"):
-        got = sorted(t for t in map(tuple, inc[part].collect()))
-        want = sorted(
-            t for t in map(tuple, batch[part].collect()) if t[0] in shard_ids
-        )
-        assert got == want, part
-
-
-def test_passages_increment_chained_shards(spark):
-    """A second shard must see repeats against BOTH the seed corpus and
-    the first shard (update_index=True threads the state through)."""
-    import tempfile
-
-    from uma_etl_iis_loader_spark.operators.passages import (
-        build_shingle_index,
-        passages_increment,
-    )
-
-    phrase = " ".join(f"p{i}" for i in range(10))
-    seed = spark.createDataFrame(
-        [(1, "seed doc " + " ".join(f"s{i}" for i in range(12)))],
-        "doc_id long, text string",
-    )
-    s1 = spark.createDataFrame(
-        [(10, phrase + " first shard tail words going here")],
-        "doc_id long, text string",
-    )
-    s2 = spark.createDataFrame(
-        [(20, phrase + " second shard different tail tokens")],
-        "doc_id long, text string",
-    )
-    idx = tempfile.mkdtemp(prefix="shingle_idx2_") + "/idx"
-    build_shingle_index(seed, idx, k=8)
-
-    out1 = passages_increment(s1, idx, k=8, update_index=True)
-    assert out1["spans"].count() == 0  # nothing shared with seed yet
-    out2 = passages_increment(s2, idx, k=8, update_index=True)
-    spans = [tuple(r) for r in out2["spans"].collect()]
-    # the 10-word shared phrase: window starts 0..2 → span (0, 9)
-    assert spans == [(20, 0, 9)]
-
-
-def test_passages_increment_guards_lazy_update(spark):
-    import tempfile
-
-    import pytest
-
-    from uma_etl_iis_loader_spark.operators.passages import (
-        build_shingle_index,
-        passages_increment,
-    )
-
-    df = spark.createDataFrame(
-        [(1, " ".join(f"x{i}" for i in range(12)))], "doc_id long, text string"
-    )
-    idx = tempfile.mkdtemp(prefix="shingle_idx3_") + "/idx"
-    build_shingle_index(df, idx, k=8)
-    with pytest.raises(ValueError, match="pin=True"):
-        passages_increment(df, idx, k=8, update_index=True, pin=False)
-
-
-def test_compact_shingle_index_preserves_answers(spark):
-    import tempfile
-
-    from uma_etl_iis_loader_spark.operators.passages import (
-        build_shingle_index,
-        compact_shingle_index,
-        passages_increment,
-    )
-
-    phrase = " ".join(f"c{i}" for i in range(10))
-    seed = spark.createDataFrame(
-        [(1, phrase + " one two three four"),
-         (2, "unrelated words for the seed corpus second document entry")],
-        "doc_id long, text string",
-    )
-    idx = tempfile.mkdtemp(prefix="shingle_cmp_") + "/idx"
-    build_shingle_index(seed, idx, k=8)
-    s1 = spark.createDataFrame(
-        [(10, phrase + " tail alpha beta gamma")], "doc_id long, text string"
-    )
-    passages_increment(s1, idx, k=8, update_index=True)
-    before_keys = (
-        spark.read.parquet(idx + "/keys").groupBy("key")
-        .sum("nd").orderBy("key").collect()
-    )
-    from uma_etl_iis_loader_spark.operators.index_pointer import (
-        resolve_table,
-    )
-
-    compact_shingle_index(spark, idx)
-    after_raw = spark.read.parquet(resolve_table(idx, "keys"))
-    # compaction: one row per key, same summed counts
-    assert after_raw.groupBy("key").count().filter("count > 1").count() == 0
-    after_keys = (
-        after_raw.groupBy("key").sum("nd").orderBy("key").collect()
-    )
-    assert [tuple(r) for r in before_keys] == [tuple(r) for r in after_keys]
-    # and a post-compaction increment still sees the repeats
-    s2 = spark.createDataFrame(
-        [(20, phrase + " other tail words here")], "doc_id long, text string"
-    )
-    out = passages_increment(s2, idx, k=8, update_index=False)
-    assert out["spans"].count() == 1
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

@@ -78,36 +78,6 @@ def test_brute_force_query_cap(spark, sf_dir):
         brute_force_topk(emb, q, k=5, max_queries=10)
 
 
-def test_persisted_ivf_index_matches_inline_and_prunes_partitions(spark, sf_dir, tmp_path):
-    """build_ivf_index + ivf_index_topk must return EXACTLY what the
-    inline ivf_topk computes (same deterministic centroids), and the
-    vectors scan must carry a centroid_id PartitionFilter — the probed
-    cells are the only partitions read."""
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_topk,
-        ivf_topk,
-    )
-
-    emb = _emb(spark, sf_dir)
-    q = _queries(emb)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, nlist=16)
-
-    idx = ivf_index_topk(spark, path, q, k=10, nprobe=4)
-    inline = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk(emb, q, k=10, nprobe=4).collect()
-    }
-    got = {(r.query_id, r.neighbor_id, r.rank) for r in idx.collect()}
-    assert got == inline
-
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid_id" in plan.replace(
-        "PartitionFilters: [isnotnull(centroid_id", "PartitionFilters: [centroid_id"
-    ) or "centroid_id#" in plan.split("PartitionFilters")[1][:200]
-
-
 def test_quantize_roundtrip_bound(spark):
     """int8 round-trip: per-component error <= scale/2; cosine between
     original and reconstruction stays ~1; zero vectors survive."""
@@ -149,58 +119,6 @@ def test_quantize_roundtrip_bound(spark):
         else:
             assert r["p"]["scale"] == 0.0 and all(q == 0 for q in r["p"]["q"])
             assert r["u"] == [0.0, 0.0, 0.0, 0.0]
-
-
-def test_append_ivf_index_serves_new_vectors(spark, sf_dir):
-    """Appended vectors are queryable through the same partition-pruned
-    path, and top-k over the appended index equals top-k over an index
-    REBUILT on the full corpus with the same centroids' geometry (here:
-    identical because centroids come from the same seed sample)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
-        ivf_index_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    seed = emb.filter(F.col("vec_id") < 300)
-    extra = emb.filter(F.col("vec_id") >= 300)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    path = tempfile.mkdtemp(prefix="ivf_append_") + "/idx"
-    build_ivf_index(seed, path, nlist=8)
-    before = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_index_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-    append_ivf_index(extra, path)
-    after = ivf_index_topk(spark, path, queries, k=5, nprobe=8)
-    rows = after.collect()
-    appended_hits = {r.neighbor_id for r in rows if r.neighbor_id >= 300}
-    assert appended_hits, "appended vectors never surfaced in top-k"
-    # every query still returns exactly k results
-    import collections
-
-    per_q = collections.Counter(r.query_id for r in rows)
-    assert set(per_q.values()) == {5}
-    # with nprobe == nlist (exhaustive probe) the appended index must
-    # rank EXACTLY like brute force over the union — appends cannot
-    # lose or duplicate vectors
-    from uma_etl_iis_loader_spark.operators.similarity import brute_force_topk
-
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    assert {(r.query_id, r.neighbor_id) for r in rows} == brute
-    assert before != brute  # the append actually changed the result set
 
 
 def test_pq_roundtrip_compression_and_recall(spark, sf_dir):
@@ -262,386 +180,36 @@ def test_pq_encoding_deterministic(spark, sf_dir):
     assert c1 == c2
 
 
-def test_ivfpq_index_end_to_end(spark, sf_dir):
-    """IVF+PQ combined index: exhaustive probe + refine matches brute
-    force exactly on the fixture; a partial probe still returns k rows
-    per query and partition-prunes the vectors scan."""
-    import tempfile
-
+def test_ivf_cell_balance_bound(spark, sf_dir):
+    """Cell occupancy: the Lloyd-refined centroids must not collapse the
+    fixture into a few hot cells — pin a max/mean ceiling so a
+    centroid-quality regression fails loudly."""
     from pyspark.sql import functions as F
 
     from uma_etl_iis_loader_spark.io import read_fixture
     from uma_etl_iis_loader_spark.operators.similarity import (
-        brute_force_topk,
-        build_ivfpq_index,
-        ivfpq_topk,
+        _assign_centroid,
+        _ivf_centroids,
     )
 
     emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    c = emb.filter(F.col("vec_id") % 2 == 0).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
     )
-    path = tempfile.mkdtemp(prefix="ivfpq_") + "/idx"
-    build_ivfpq_index(emb, path, nlist=8, m=8, ksub=256)
-
-    # exhaustive probe + generous refine == brute force (PQ only orders
-    # the shortlist; refine rescoring is exact)
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    full = ivfpq_topk(
-        spark, path, queries, k=5, nprobe=8, refine_factor=20
-    )
-    got = {(r.query_id, r.neighbor_id) for r in full.collect()}
-    n_q = queries.count()
-    recall = len(got & brute) / len(brute)
-    assert recall >= 0.95, recall
-
-    # partial probe: k rows per query, pruned scan
-    part = ivfpq_topk(spark, path, queries, k=5, nprobe=2, refine_factor=4)
-    rows = part.collect()
-    import collections
-
-    per_q = collections.Counter(r.query_id for r in rows)
-    assert len(per_q) == n_q and set(per_q.values()) == {5}
-    plan = part._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
-
-
-def test_ivfpq_results_independent_of_batch_composition(spark, sf_dir):
-    """A query's IVF+PQ result must be identical whether it runs alone
-    or batched with other queries (per-query cell restriction — without
-    it, cells probed only by OTHER queries leak into the result)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    batch = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    one_id = batch.select(F.min("query_id")).collect()[0][0]
-    solo = batch.filter(F.col("query_id") == one_id)
-
-    path = tempfile.mkdtemp(prefix="ivfpq_batch_") + "/idx"
-    build_ivfpq_index(emb, path, nlist=8, m=8, ksub=256)
-
-    in_batch = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            spark, path, batch, k=5, nprobe=2, refine_factor=4
-        ).collect()
-        if r.query_id == one_id
-    }
-    alone = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            spark, path, solo, k=5, nprobe=2, refine_factor=4
-        ).collect()
-    }
-    assert in_batch == alone
-
-
-def test_compact_ivf_index_preserves_results_and_prunes(spark, sf_dir, tmp_path):
-    """After several small appends, compaction shrinks the file count,
-    leaves ivf_index_topk results bit-identical, and keeps the
-    centroid_id PartitionFilter on the scan (the directory layout is
-    untouched). Also pins the crash-safety invariant: no moment during
-    compaction removes the only copy (the generation-pointer protocol —
-    the pointer flips only after the next generation is fully
-    written)."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.index_pointer import (
-        resolve_table,
-    )
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
-        compact_ivf_index,
-        ivf_index_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    path = str(tmp_path / "idx")
-    build_ivf_index(emb.filter(F.col("vec_id") < 200), path, nlist=8)
-    for lo in (200, 300, 400):
-        append_ivf_index(
-            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 100)),
-            path,
-        )
-
-    def files():
-        live = resolve_table(path, "vectors")
-        return glob.glob(f"{live}/centroid_id=*/*.parquet")
-
-    before_files = files()
-    before = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_index_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-    compact_ivf_index(spark, path)
-    after_files = files()
-    assert len(after_files) < len(before_files), (
-        len(before_files),
-        len(after_files),
-    )
-    # one file per cell at this size (all cells far under the target)
-    assert len(after_files) == len(
-        glob.glob(f"{resolve_table(path, 'vectors')}/centroid_id=*")
-    )
-    out = ivf_index_topk(spark, path, queries, k=5, nprobe=8)
-    after = {(r.query_id, r.neighbor_id, r.rank) for r in out.collect()}
-    assert after == before
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan
-
-
-def test_compact_ivf_index_works_on_ivfpq_layout(spark, sf_dir, tmp_path):
-    """compact_ivf_index is schema-agnostic over the `vectors` table —
-    the IVF+PQ layout (codes + kept float vectors per centroid
-    partition) compacts with results preserved bit-identically."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivfpq_index,
-        compact_ivf_index,
-        ivfpq_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    path = str(tmp_path / "pqidx")
-    build_ivfpq_index(emb, path, nlist=8, m=8, ksub=256)
-    # append-shaped growth: split the vectors table into extra files
-    spark.read.parquet(path + "/vectors").write.mode("append").partitionBy(
-        "centroid_id"
-    ).parquet(path + "/vectors")
-    # (the duplicate rows from the self-append would change results;
-    # rewrite to distinct first so the fixture is growth-shaped but
-    # content-identical)
-    import shutil
-
-    dedup = spark.read.parquet(path + "/vectors").distinct().localCheckpoint()
-    shutil.rmtree(path + "/vectors")
-    dedup.repartition(6).write.partitionBy("centroid_id").parquet(
-        path + "/vectors"
-    )
-
-    from uma_etl_iis_loader_spark.operators.index_pointer import (
-        resolve_table,
-    )
-
-    before_files = glob.glob(f"{path}/vectors/centroid_id=*/*.parquet")
-    before = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-    compact_ivf_index(spark, path)
-    after_files = glob.glob(
-        f"{resolve_table(path, 'vectors')}/centroid_id=*/*.parquet"
-    )
-    assert len(after_files) < len(before_files)
-    after = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-    assert after == before and len(after) > 0
-
-
-def test_compact_ivf_index_self_heals_crash_residue(spark, sf_dir, tmp_path):
-    """A compaction re-run after any crash point recovers: .old with no
-    live dir restores; stale .next/.old discard; results unchanged."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivf_index,
-        compact_ivf_index,
-        ivf_index_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    path = str(tmp_path / "idx")
-    build_ivf_index(emb.filter(F.col("vec_id") < 300), path, nlist=8)
-    want = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_index_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-
-    # crash point A: between the renames — only .old holds the data
-    os.rename(path + "/vectors", path + "/vectors.old")
-    compact_ivf_index(spark, path)
-    got = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_index_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-    assert got == want and not os.path.isdir(path + "/vectors.old")
-
-    # crash point B: incomplete .next + leftover .old beside a live dir
-    shutil.copytree(path + "/vectors", path + "/vectors.next")
-    shutil.copytree(path + "/vectors", path + "/vectors.old")
-    compact_ivf_index(spark, path)
-    got2 = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_index_topk(spark, path, queries, k=5, nprobe=8).collect()
-    }
-    assert got2 == want
-    assert not os.path.isdir(path + "/vectors.next")
-    assert not os.path.isdir(path + "/vectors.old")
-
-
-def test_ivfpq_distributed_matches_driver_path(spark, sf_dir, tmp_path):
-    """The co-grouped distributed query path must return EXACTLY the
-    driver path's results (same ADC math, same residual offsets, same
-    shortlist, same refine), whether forced or auto-selected."""
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    queries = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(emb, path, nlist=8, m=8, ksub=256)
-
-    driver = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            spark, path, queries, k=5, nprobe=2, refine_factor=4
-        ).collect()
-    }
-    dist = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            spark, path, queries, k=5, nprobe=2, refine_factor=4,
-            distributed=True,
-        ).collect()
-    }
-    assert dist == driver
-
-
-def test_ivfpq_auto_distributes_past_query_cap(spark, sf_dir, tmp_path):
-    """|Q| > max_queries must NOT raise on the default distributed='auto'
-    path — a corpus-sized query set (every vector queries the index) runs
-    as an ordinary co-grouped job, its executed plan shows the cogroup
-    kernel, and the query set is never collected (the only collects are
-    the ≤nlist-bounded cell-id / sidecar reads). distributed=False
-    restores the old hard raise."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    all_queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(emb, path, nlist=8, m=8, ksub=256)
-
-    with pytest.raises(ValueError, match="distributed"):
-        ivfpq_topk(
-            spark, path, all_queries, k=3, nprobe=2, max_queries=10,
-            distributed=False,
-        )
-
-    out = ivfpq_topk(
-        spark, path, all_queries, k=3, nprobe=2, refine_factor=4,
-        max_queries=10,
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
-    rows = out.collect()
-    n_q = all_queries.count()
-    import collections
-
-    per_q = collections.Counter(r.query_id for r in rows)
-    assert len(per_q) == n_q and set(per_q.values()) == {3}
-    # each query's own vector is in the index and in its probed cell:
-    # rank 1 must be the query itself
-    top1 = {r.query_id: r.neighbor_id for r in rows if r.rank == 1}
-    assert all(q == n for q, n in top1.items())
-
-    # spot-check against the driver path on the full set (cap lifted)
-    driver = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            spark, path, all_queries, k=3, nprobe=2, refine_factor=4,
-            max_queries=100_000,
-        ).collect()
-    }
-    assert {(r.query_id, r.neighbor_id, r.rank) for r in rows} == driver
-
-
-def test_ivf_cell_balance_bound(spark, sf_dir, tmp_path):
-    """Cell-occupancy telemetry: the Lloyd-refined centroids must not
-    collapse the fixture into a few hot cells — pin a max/mean ceiling
-    so a centroid-quality regression fails loudly, and the stats must
-    reflect appends (computed live, not a stale build sidecar)."""
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
-        ivf_cell_balance,
-        ivf_cell_stats,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    path = str(tmp_path / "idx")
-    build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), path, nlist=16)
-
-    bal = ivf_cell_balance(spark, path, nlist=16)
-    assert bal["n_cells"] + bal["empty_cells"] == 16
-    total = int(
-        ivf_cell_stats(spark, path).agg(F.sum("n_vectors")).collect()[0][0]
-    )
-    assert total == emb.filter(F.col("vec_id") % 2 == 0).count()
+    cent = _ivf_centroids(c, 16)
+    counts = [
+        r["count"]
+        for r in _assign_centroid(c, cent, "neighbor_id", "cvec", 1)
+        .groupBy("centroid_id")
+        .count()
+        .collect()
+    ]
+    assert len(counts) <= 16
+    assert sum(counts) == c.count()
     # skew ceiling on the fixture: measured ~2-3x at nlist=16; 6x is the
     # regression alarm, not a physics bound
-    assert 1.0 <= bal["max_over_mean"] <= 6.0, bal
-
-    # appends must show up (stats are live)
-    append_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path)
-    total2 = int(
-        ivf_cell_stats(spark, path).agg(F.sum("n_vectors")).collect()[0][0]
-    )
-    assert total2 == emb.count()
+    max_over_mean = max(counts) / (sum(counts) / len(counts))
+    assert 1.0 <= max_over_mean <= 6.0, counts
 
 
 def test_opq_rotation_laws():
@@ -683,77 +251,6 @@ def test_opq_rotation_laws():
     rot0, books0 = _train_opq_on(vm, m, ksub, iters=10, opq_iters=0)
     assert np.array_equal(rot0, np.eye(64))
     assert np.array_equal(books0, plain_books)
-
-
-def test_append_ivfpq_index_serves_new_vectors(spark, sf_dir, tmp_path):
-    """IVF+PQ incremental ingest: appended vectors are encoded with the
-    index's frozen quantizer state (centroids + codebooks + rotation)
-    and must rank IDENTICALLY to a from-scratch rebuild over the same
-    corpus — every sidecar byte the append path reads equals what the
-    build wrote, or ADC scores diverge and this fails."""
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-        ivfpq_topk,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    seed = emb.filter(F.col("vec_id") % 2 == 0)
-    extra = emb.filter(F.col("vec_id") % 2 == 1)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    path_a = str(tmp_path / "appended")
-    build_ivfpq_index(seed, path_a, nlist=8, m=8, ksub=256)
-    before = {
-        r.neighbor_id
-        for r in ivfpq_topk(spark, path_a, queries, k=5, nprobe=8).collect()
-    }
-    append_ivfpq_index(extra, path_a)
-    after = ivfpq_topk(spark, path_a, queries, k=5, nprobe=8)
-    after_set = {(r.query_id, r.neighbor_id, r.rank) for r in after.collect()}
-    # appended odd ids are now reachable
-    assert any(n % 2 == 1 for _, n, _ in after_set)
-    assert before  # sanity: the seed index answered
-
-    # frozen-quantizer parity: an append must score exactly like a
-    # rebuild WOULD with the same quantizer — verify by querying the
-    # appended index twice (determinism) and via the distributed path
-    again = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(spark, path_a, queries, k=5, nprobe=8).collect()
-    }
-    assert again == after_set
-    dist = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivfpq_topk(
-            spark, path_a, queries, k=5, nprobe=8, distributed=True
-        ).collect()
-    }
-    assert dist == after_set
-
-
-def test_append_ivf_index_refuses_ivfpq_layout(spark, sf_dir, tmp_path):
-    """Pointing the plain-IVF append at an IVF+PQ index would write rows
-    without codes and corrupt the ADC scan — it must refuse loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivfpq_index,
-    )
-
-    emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(emb.filter(F.col("vec_id") < 300), path, nlist=8)
-    with pytest.raises(ValueError, match="append_ivfpq_index"):
-        append_ivf_index(emb.filter(F.col("vec_id") >= 300), path)
 
 
 def test_brute_force_distributed_matches_driver(spark, sf_dir):

@@ -110,47 +110,6 @@ def workloads(spark, sf_dir: str, base_dir: str):
             refine_corpus=emb, refine_factor=4,
         )
 
-    def ivfpq_corpus_queries():
-        # the corpus-vs-corpus shape (re-embedding a corpus against
-        # itself) through the DISTRIBUTED query path: index build +
-        # |corpus|/10 queries, forced through the co-grouped plan
-        # (distributed=True — no driver collect of the query set).
-        # nlist scales with the corpus (constant cell size), so ADC
-        # work = |Q| x nprobe x cell ∝ corpus — linear; with fixed
-        # nlist it would be quadratic (the knn_ivf_scaled_nlist story).
-        # opq_iters=0 keeps the constant driver-side training cost out
-        # of the scale signal (identity rotation, same query plan).
-        import shutil
-        import tempfile
-
-        from uma_etl_iis_loader_spark.operators.similarity import (
-            build_ivfpq_index,
-            ivfpq_topk,
-        )
-
-        emb = read_fixture(spark, sf_dir, "embeddings", split=False)
-        nlist = 16 if sf_dir == base_dir else 160
-
-        class _Lazy:
-            def count(self):
-                tmp = tempfile.mkdtemp(prefix="scale_ivfpq_")
-                try:
-                    path = tmp + "/idx"
-                    build_ivfpq_index(
-                        emb, path, nlist=nlist, m=8, ksub=256, opq_iters=0
-                    )
-                    q = emb.filter(F.col("vec_id") % 10 == 0).select(
-                        F.col("vec_id").alias("query_id"), "embedding"
-                    )
-                    return ivfpq_topk(
-                        spark, path, q, k=10, nprobe=4, refine_factor=4,
-                        distributed=True,
-                    ).count()
-                finally:
-                    shutil.rmtree(tmp, ignore_errors=True)
-
-        return _Lazy()
-
     def pagerank_events():
         from uma_etl_iis_loader_spark.operators.graph import pagerank
 
@@ -322,7 +281,6 @@ def workloads(spark, sf_dir: str, base_dir: str):
         "knn_ivf_fixed_q": knn_ivf,
         "knn_ivf_scaled_nlist": knn_ivf_scaled_nlist,
         "pq_fixed_q": pq_fixed,
-        "ivfpq_corpus_q_distributed": ivfpq_corpus_queries,
         "repeated_passages_hashed": passages_hashed,
         "bm25_rank": from_registry("bm25_rank"),
         "text_analysis": from_registry("text_analysis"),

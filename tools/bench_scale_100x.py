@@ -13,13 +13,13 @@ rather than silent):
   corpus_stats_ops, multimodal_ops) embed exact-oracle recomputation by
   DESIGN (the correctness gate's cost, not the production path); their
   production constituents are measured individually below;
-- the PERSISTED ANN serving layout IS measured here: IVF index build
-  (one-time ingest cost, scaled nlist = constant cell size) and the
-  partition-pruned query pass timed as SEPARATE rows, plus the IVF+PQ
-  build + distributed query path, plus the two stateless ANN rungs
-  (SRP-LSH and flat PQ+refine over the fixed query set). The transient
-  knn_* rows (index rebuilt per query call) stay first-step-only — they
-  measure the same arithmetic with the build cost mixed in;
+- ANN is measured by the two stateless rungs (SRP-LSH and flat
+  PQ+refine over the fixed query set). The transient knn_* rows (index
+  rebuilt per query call) stay first-step-only — they measure the same
+  arithmetic with the build cost mixed in. The persisted IVF / IVF+PQ
+  index rows and the MinHash-LSH signature-margin and bucket-chaining
+  rows were removed with the code they timed; their past cells stay in
+  SCALE_STEP_100X.json as history;
 - z-order layout is a full-table rewrite (IO-bound; linear by
   construction — file count = ceil(bytes/target)).
 
@@ -58,8 +58,8 @@ fresh session at each SF, so the A/B RATIO is robust to host drift
 even when absolute cells fail the gate. Results land under the
 artifact's "paired" key: per-pass ratios from ALL sessions (the
 drift-robust statistic), absolute medians from gate-ACCEPTED sessions
-only. Built for the dedup_lsh_longdoc_margin vs dedup_lsh_longdoc
-contrast (the sig_margin winning-regime claim).
+only. Built for the (since removed) signature-margin long-doc
+contrast; any two SUBSET rows can be paired.
 
 Usage: python tools/bench_scale_100x.py [sf1_dir] [sf10_dir]
            [--probe-threshold X] [--force-probe a,b] [--no-probe]
@@ -92,20 +92,11 @@ SUBSET = [
     "etl_job_sync",
     "etl_payload_build",
     "etl_spark_sync",
-    "ivf_index_build",
-    "ivf_index_query",
-    "ivfpq_index_build",
-    "ivfpq_index_query_dist",
     "srp_lsh_topk",
     "pq_flat_topk",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "dedup_minhash_lsh_margin",
-    "dedup_minhash_lsh_bounded",
     "dedup_minhash_lsh_hiprec",
-    "longdoc_corpus_build",
-    "dedup_lsh_longdoc",
-    "dedup_lsh_longdoc_margin",
     "repeated_passages_hashed",
     "bm25_rank",
     "text_analysis",
@@ -126,34 +117,29 @@ SUBSET = [
 # for attribution, excluded from the headline totals
 SIMULATION_ROWS = {"etl_payload_build", "etl_job_sync"}
 
-# rows that measure a DESIGNED CONTRAST on a derived corpus (the
-# long-doc margin-vs-plain cascade experiment), not fixture scaling:
-# excluded from both totals so total_ratio stays comparable with the
-# r8-r11 artifacts, which predate these rows. Their cells land under
-# "paired" / per-row entries only.
+# rows that measured a DESIGNED CONTRAST on a derived corpus (the
+# long-doc margin-vs-plain cascade experiment, since removed), not
+# fixture scaling: their cells stay in the committed artifact, so they
+# stay excluded from both totals and total_ratio remains comparable
+# with the r8-r11 artifacts, which predate these rows.
 CONTRAST_ROWS = {
     "longdoc_corpus_build", "dedup_lsh_longdoc", "dedup_lsh_longdoc_margin",
 }
 TOTALS_EXCLUDED = SIMULATION_ROWS | CONTRAST_ROWS
 
 # probe-mode dependency graph: rows whose thunk consumes state another
-# row's thunk produces (payload dicts, persisted index paths). Probing
-# a dependent row runs its deps first, untimed, in the same session.
+# row's thunk produces (payload dicts). Probing a dependent row runs
+# its deps first, untimed, in the same session.
 DEPS = {
     "etl_spark_sync": ["etl_payload_build"],
-    "ivf_index_query": ["ivf_index_build"],
-    "ivfpq_index_query_dist": ["ivfpq_index_build"],
-    "dedup_lsh_longdoc": ["longdoc_corpus_build"],
-    "dedup_lsh_longdoc_margin": ["longdoc_corpus_build"],
 }
 
 
 def build_workloads(spark, sf_dir: str, base_dir: str):
     """Full thunk dict for one SF dir (bench_scale's workloads plus the
-    100x-only rows). Returns (thunks, cleanup_fn). State produced by one
-    thunk for another (ETL payloads, ANN index paths) lives in closure
-    dicts keyed by sf_dir, so deps must run first — run() follows SUBSET
-    order; probe mode follows DEPS."""
+    100x-only rows). State produced by one thunk for another (ETL
+    payloads) lives in closure dicts keyed by sf_dir, so deps must run
+    first — run() follows SUBSET order; probe mode follows DEPS."""
     from uma_etl_iis_loader_spark.plans.fixtures import (
         materialize_schedule_fixture,
     )
@@ -184,50 +170,6 @@ def build_workloads(spark, sf_dir: str, base_dir: str):
         )
 
     w["dedup_minhash_lsh_hiprec"] = lsh_hiprec
-
-    def lsh_bounded():
-        # the same RECALL-oriented operating point as the default row
-        # (16 bands x 4 rows, threshold 0.35) under the production
-        # bounds: buckets above max_bucket=32 verify by representative
-        # chaining (m-1 comparisons; connected_components downstream
-        # restores the family closure — component equality on dup-
-        # family fixtures is law-tested in tests/test_dedup.py). This
-        # is how a hard recall requirement is SERVED on a boilerplate-
-        # dense corpus without paying m^2/2 verifies per dup family.
-        from uma_etl_iis_loader_spark.io import read_fixture
-        from uma_etl_iis_loader_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-
-        docs = read_fixture(spark, sf_dir, "documents")
-        return minhash_lsh_pairs(
-            docs, num_hashes=64, bands=16, n=3, threshold=0.35,
-            char_level=False, max_bucket=32,
-        )
-
-    w["dedup_minhash_lsh_bounded"] = lsh_bounded
-
-    def lsh_margin():
-        # the estimate-first cascade at the recall operating point:
-        # pairs whose signature-estimated Jaccard falls below
-        # threshold - 0.2 skip the exact gram intersection
-        # (false-negative prob per true pair <= exp(-2*0.2^2*64) ~ 0.6%,
-        # Hoeffding). Emitted pairs are a SUBSET of the grouped row's
-        # (estimate only ever skips; everything emitted is still
-        # exact-verified), so measured recall = rows(margin)/rows(grouped)
-        # — computed below from the captured row counts.
-        from uma_etl_iis_loader_spark.io import read_fixture
-        from uma_etl_iis_loader_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-
-        docs = read_fixture(spark, sf_dir, "documents")
-        return minhash_lsh_pairs(
-            docs, num_hashes=64, bands=16, n=3, threshold=0.35,
-            char_level=False, sig_margin=0.2,
-        )
-
-    w["dedup_minhash_lsh_margin"] = lsh_margin
 
     # --- etl_job_sync phase split: driver payload build vs Spark sync ---
     payloads: dict[str, tuple] = {}
@@ -261,28 +203,12 @@ def build_workloads(spark, sf_dir: str, base_dir: str):
     w["etl_payload_build"] = etl_payload_build
     w["etl_spark_sync"] = etl_spark_sync
 
-    # --- persisted ANN serving layout: build and query timed apart ---
-    # scaled nlist keeps cell size ~125 vectors (the production recipe);
-    # queries are the base SF's fixed set, so query work scales with the
-    # CORPUS only. Build rows measure the one-time ingest cost; query
-    # rows measure the partition-pruned serving pass the layout exists
-    # for (PartitionFilter pruning itself is plan-asserted in
-    # tests/test_similarity.py).
-    import shutil
-    import tempfile
-
+    # --- stateless ANN rungs over the base SF's fixed query set, so
+    # query work scales with the CORPUS only ---
     from pyspark.sql import functions as F
 
     from uma_etl_iis_loader_spark.io import read_fixture as _rf
-    from uma_etl_iis_loader_spark.operators.similarity import (
-        build_ivf_index,
-        build_ivfpq_index,
-        ivf_index_topk,
-        ivfpq_topk,
-        srp_lsh_topk,
-    )
-
-    ann_paths: dict[str, str] = {}
+    from uma_etl_iis_loader_spark.operators.similarity import srp_lsh_topk
 
     def _emb():
         return _rf(spark, sf_dir, "embeddings", split=False)
@@ -293,40 +219,6 @@ def build_workloads(spark, sf_dir: str, base_dir: str):
             F.col("vec_id").alias("query_id"), "embedding"
         )
 
-    def _nlist():
-        return max(16, _emb().count() // 125)
-
-    def ivf_index_build():
-        base = tempfile.mkdtemp(prefix="scale100x_ivf_")
-        ann_paths["ivf"] = base + "/idx"
-        build_ivf_index(_emb(), ann_paths["ivf"], nlist=_nlist())
-        return spark.read.parquet(ann_paths["ivf"] + "/centroids")
-
-    def ivf_index_query():
-        return ivf_index_topk(
-            spark, ann_paths["ivf"], _fixed_queries(), k=10, nprobe=8
-        )
-
-    def ivfpq_index_build():
-        base = tempfile.mkdtemp(prefix="scale100x_ivfpq_")
-        ann_paths["ivfpq"] = base + "/idx"
-        build_ivfpq_index(
-            _emb(), ann_paths["ivfpq"], nlist=_nlist(), m=8, ksub=256,
-            opq_iters=0,
-        )
-        return spark.read.parquet(ann_paths["ivfpq"] + "/centroids")
-
-    def ivfpq_index_query_dist():
-        return ivfpq_topk(
-            spark, ann_paths["ivfpq"], _fixed_queries(), k=10,
-            nprobe=8, distributed=True,
-        )
-
-    w["ivf_index_build"] = ivf_index_build
-    w["ivf_index_query"] = ivf_index_query
-    w["ivfpq_index_build"] = ivfpq_index_build
-    w["ivfpq_index_query_dist"] = ivfpq_index_query_dist
-
     def srp_topk_row():
         # the STATELESS ANN rung: data-independent hyperplane signatures
         # (pure map on the ingest side, no training pass, survives
@@ -335,7 +227,7 @@ def build_workloads(spark, sf_dir: str, base_dir: str):
         # 32 bits / 4 bands = 8-bit chunks — random-pair collision
         # ~0.4%/band, so the candidate join stays ~|Q| x |C| x 1.6%
         # instead of brute force's |Q| x |C|. Serves the append-heavy /
-        # no-retrain regime; IVF(+PQ) serves the read-heavy one.
+        # no-retrain regime.
         return srp_lsh_topk(
             _emb(), _fixed_queries(), k=10, n_bits=32, bands=4, d=64
         )
@@ -362,100 +254,17 @@ def build_workloads(spark, sf_dir: str, base_dir: str):
 
     w["srp_lsh_topk"] = srp_topk_row
     w["pq_flat_topk"] = pq_flat_row
-
-    # --- sig_margin winning regime: LONG documents (grams >> hashes) ---
-    # r10 measured cascade parity at the fixture's ~50-word docs (the
-    # estimate costs about what it saves); the design claim "wins when
-    # grams >> num_hashes" is exercised here on a long-doc corpus built
-    # from the fixture itself: sliding windows of 20 consecutive
-    # doc_ids, stride 4 — ~1,080-word long docs (54-word fixture
-    # average). Distance-d window neighbors share (20-4d) of their
-    # (20+4d) source docs (d=1: J~0.67 = the TRUE pairs at threshold
-    # 0.5; d=2: 0.43; d=3: 0.25), and the tile-marker perturbation
-    # makes cross-tile same-window copies J~0.25 — a sub-threshold
-    # candidate population that grows QUADRATICALLY with tiles
-    # (C(tiles,2) collisions per window family at ~6% LSH collision
-    # rate), exactly the regime the cascade exists for: at threshold
-    # 0.5, sig_margin 0.2 (estimate cut 0.3; Hoeffding per-true-pair
-    # miss <= exp(-2*0.2^2*64) ~ 0.6%), the 64-element signature
-    # estimate skips the ~1,080-gram exact intersection for every
-    # planted sub-threshold candidate, while d=1 (est ~0.67) and d=2
-    # (est ~0.43) pairs still reach the exact verify in BOTH rows.
-    # The corpus is materialized ONCE as a dep row (longdoc_corpus_
-    # build, untimed in probes) so the margin-vs-plain contrast
-    # measures the verify path, not the shared window-concat shuffle.
-    longdoc_paths: dict[str, str] = {}
-
-    def longdoc_corpus_build():
-        docs = _rf(spark, sf_dir, "documents")
-        exploded = (
-            docs.select(
-                "doc_id",
-                "text",
-                F.explode(F.sequence(F.lit(0), F.lit(4))).alias("j"),
-            )
-            .select(
-                (F.floor(F.col("doc_id") / 4) - F.col("j")).alias("win_id"),
-                "doc_id",
-                "text",
-            )
-            .filter(F.col("win_id") >= 0)
-        )
-        long_docs = (
-            exploded.groupBy("win_id")
-            .agg(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("doc_id", "text"))
-                        ),
-                        lambda s: s["text"],
-                    ),
-                ).alias("text")
-            )
-            .select(F.col("win_id").alias("doc_id"), "text")
-        )
-        base_tmp = tempfile.mkdtemp(prefix="scale100x_longdoc_")
-        longdoc_paths[sf_dir] = base_tmp + "/docs"
-        long_docs.write.parquet(longdoc_paths[sf_dir])
-        return spark.read.parquet(longdoc_paths[sf_dir])
-
-    def _longdoc_lsh(margin):
-        from uma_etl_iis_loader_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-
-        ld = spark.read.parquet(longdoc_paths[sf_dir])
-        return minhash_lsh_pairs(
-            ld, num_hashes=64, bands=16, n=3, threshold=0.5,
-            char_level=False, sig_margin=margin,
-        )
-
-    w["longdoc_corpus_build"] = longdoc_corpus_build
-    w["dedup_lsh_longdoc"] = lambda: _longdoc_lsh(None)
-    w["dedup_lsh_longdoc_margin"] = lambda: _longdoc_lsh(0.2)
-
-    def cleanup():
-        for p in ann_paths.values():
-            shutil.rmtree(os.path.dirname(p), ignore_errors=True)
-        for p in longdoc_paths.values():
-            shutil.rmtree(os.path.dirname(p), ignore_errors=True)
-
-    return w, cleanup
+    return w
 
 
 def run(spark, sf_dir: str, base_dir: str, names=None):
     """Time each row; returns (times, row_counts)."""
-    w, cleanup = build_workloads(spark, sf_dir, base_dir)
+    w = build_workloads(spark, sf_dir, base_dir)
     out, counts = {}, {}
-    try:
-        for name in names or SUBSET:
-            t0 = time.time()
-            counts[name] = w[name]().count()
-            out[name] = round(time.time() - t0, 3)
-    finally:
-        cleanup()
+    for name in names or SUBSET:
+        t0 = time.time()
+        counts[name] = w[name]().count()
+        out[name] = round(time.time() - t0, 3)
     return out, counts
 
 
@@ -479,28 +288,22 @@ def probe_row(name: str, base: str, scaled: str) -> None:
     _warmup(spark, base)
     deps = DEPS.get(name, [])
 
-    w, cleanup = build_workloads(spark, base, base)
-    try:
-        for d in deps:
-            w[d]().count()
-        w[name]().count()  # warm pass: codegen shapes
-        hostgate.warm()
-        gate_before = hostgate.measure()
-        t0 = time.time()
-        rows_base = w[name]().count()
-        base_s = round(time.time() - t0, 3)
-    finally:
-        cleanup()
+    w = build_workloads(spark, base, base)
+    for d in deps:
+        w[d]().count()
+    w[name]().count()  # warm pass: codegen shapes
+    hostgate.warm()
+    gate_before = hostgate.measure()
+    t0 = time.time()
+    rows_base = w[name]().count()
+    base_s = round(time.time() - t0, 3)
 
-    w, cleanup = build_workloads(spark, scaled, base)
-    try:
-        for d in deps:
-            w[d]().count()
-        t0 = time.time()
-        rows_scaled = w[name]().count()
-        scaled_s = round(time.time() - t0, 3)
-    finally:
-        cleanup()
+    w = build_workloads(spark, scaled, base)
+    for d in deps:
+        w[d]().count()
+    t0 = time.time()
+    rows_scaled = w[name]().count()
+    scaled_s = round(time.time() - t0, 3)
     gate_after = hostgate.measure()
     print(
         "PROBE_RESULT "
@@ -538,25 +341,22 @@ def probe_pair(name_a, name_b, base, scaled, passes=2) -> None:
     hostgate.warm()
     out = {"pair": [name_a, name_b], "passes": passes}
     for tag, d in (("base", base), ("scaled", scaled)):
-        w, cleanup = build_workloads(spark, d, base)
-        try:
-            for dep in deps:
-                w[dep]().count()
-            w[name_a]().count()  # warm: codegen shapes
-            w[name_b]().count()
-            g0 = hostgate.measure()
-            runs_a, runs_b = [], []
-            rows_a = rows_b = 0
-            for _ in range(passes):
-                t0 = time.time()
-                rows_a = w[name_a]().count()
-                runs_a.append(round(time.time() - t0, 3))
-                t0 = time.time()
-                rows_b = w[name_b]().count()
-                runs_b.append(round(time.time() - t0, 3))
-            g1 = hostgate.measure()
-        finally:
-            cleanup()
+        w = build_workloads(spark, d, base)
+        for dep in deps:
+            w[dep]().count()
+        w[name_a]().count()  # warm: codegen shapes
+        w[name_b]().count()
+        g0 = hostgate.measure()
+        runs_a, runs_b = [], []
+        rows_a = rows_b = 0
+        for _ in range(passes):
+            t0 = time.time()
+            rows_a = w[name_a]().count()
+            runs_a.append(round(time.time() - t0, 3))
+            t0 = time.time()
+            rows_b = w[name_b]().count()
+            runs_b.append(round(time.time() - t0, 3))
+        g1 = hostgate.measure()
         out[tag] = {
             "runs_a_s": runs_a,
             "runs_b_s": runs_b,
@@ -651,8 +451,8 @@ def pair_only(name_a, name_b, reps, passes, base, scaled, artifact_path,
             # drift-robust: pooled over ALL sessions' within-pass pairs
             "median_ratio_a_over_b": round(statistics.median(ratios), 3),
             "ratio_n_pairs": len(ratios),
-            # emitted pairs of A are a subset of B's when A is the
-            # sig_margin row: recall = rows(A)/rows(B)
+            # row-count ratio A/B: a pair recall when A's emitted
+            # pairs are a subset of B's
             "pair_recall_a_over_b": round(
                 sessions[0][tag]["rows_a"]
                 / max(sessions[0][tag]["rows_b"], 1), 4
@@ -1205,24 +1005,6 @@ def main() -> None:
     ratios = {k: round(t_scaled[k] / max(t_base[k], 1e-3), 2) for k in t_base}
     eng_b = sum(v for k, v in t_base.items() if k not in TOTALS_EXCLUDED)
     eng_s = sum(v for k, v in t_scaled.items() if k not in TOTALS_EXCLUDED)
-    margin_recall = {
-        d: (
-            round(
-                n["dedup_minhash_lsh_margin"] / n["dedup_minhash_lsh"], 4
-            )
-            if n.get("dedup_minhash_lsh")
-            else None
-        )
-        for d, n in (("base", n_base), ("scaled", n_scaled))
-    }
-    longdoc_recall = {
-        d: (
-            round(n["dedup_lsh_longdoc_margin"] / n["dedup_lsh_longdoc"], 4)
-            if n.get("dedup_lsh_longdoc")
-            else None
-        )
-        for d, n in (("base", n_base), ("scaled", n_scaled))
-    }
     print(
         json.dumps(
             {
@@ -1247,17 +1029,9 @@ def main() -> None:
                           if k not in CONTRAST_ROWS),
                     2,
                 ),
-                # sig_margin cascade: emitted pairs are a subset of the
-                # grouped row's, so recall = rows(margin)/rows(grouped)
-                "lsh_margin_pair_recall": margin_recall,
-                "lsh_longdoc_pair_recall": longdoc_recall,
                 "lsh_pair_rows": {
                     k: n_scaled.get(k)
-                    for k in (
-                        "dedup_minhash_lsh", "dedup_minhash_lsh_margin",
-                        "dedup_minhash_lsh_bounded",
-                        "dedup_lsh_longdoc", "dedup_lsh_longdoc_margin",
-                    )
+                    for k in ("dedup_minhash_lsh", "dedup_minhash_lsh_hiprec")
                 },
                 "probes": probes,
             }

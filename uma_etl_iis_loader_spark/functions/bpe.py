@@ -16,12 +16,7 @@ Scale design (100 TB shape):
   size-bounded driver artifact — vocabularies are trained on samples in
   every production tokenizer pipeline). Pair counting uses incremental
   updates (only words containing the merged pair are touched per round),
-  not a full recount. For CORPUS-EXACT merge statistics,
-  ``bpe_word_counts`` computes the mergeable (pre-token, count) table
-  distributedly (one JVM-side agg; additive across shards via
-  ``update_bpe_counts`` — the ``lm.update_char_lm`` shape) and
-  ``train_bpe_from_counts`` trains from its capped top-``max_words``
-  head; update == recount-on-concatenation exactly (law-tested).
+  not a full recount.
 - ENCODE is fully distributed: the merge table (a few KB) ships in the
   task closure, each Arrow batch keeps a pre-token → ids memo (Zipf:
   the distinct-word working set is far smaller than the token stream),
@@ -44,14 +39,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # partitions the text completely: every char is in exactly one pre-token.
-# The whitespace class is pinned to the Unicode White_Space property —
-# exactly what the JVM's ``(?U)\s`` in bpe_word_counts matches. Python's
-# bare ``\s`` additionally counts U+001C–U+001F (FS/GS/RS/US control
-# separators: bidi class B/S, but White_Space=No), so with the naive
-# pattern text containing those four chars pre-tokenizes differently on
-# the driver/encode side than in the distributed counts path. The four
-# are moved to the NON-space side here to match Java; parity is
-# law-tested including U+001C–U+001F (test_bpe.py).
+# The whitespace class is pinned to the Unicode White_Space property (what
+# the JVM's ``(?U)\s`` matches): Python's bare ``\s`` additionally counts
+# U+001C–U+001F (FS/GS/RS/US control separators: bidi class B/S, but
+# White_Space=No), so the four are moved to the NON-space side here.
 _PRETOKEN_RE = re.compile(r"[\S\u001c-\u001f]+|[^\S\u001c-\u001f]+")
 
 BASE_VOCAB = 256
@@ -89,102 +80,11 @@ def train_bpe(
     return _merges_from_word_freq(word_freq, vocab_size)
 
 
-def bpe_word_counts(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_chars_per_doc: int | None = None,
-) -> DataFrame:
-    """(word, n) pre-token occurrence counts — the MERGEABLE training
-    statistic behind BPE (training consumes only the word-frequency
-    table, never raw text, so the counts frame is to :func:`train_bpe`
-    what ``lm.train_char_lm``'s trigram counts are to perplexity).
-    Counts are additive: persist per shard and fold new shards in with
-    :func:`update_bpe_counts` without rescanning old corpora.
-
-    Fully distributed and JVM-side: ``regexp_extract_all`` replays the
-    exact ``\\S+|\\s+`` pre-token partition, one explode, ONE count
-    aggregation with map-side combine. The JVM pattern carries ``(?U)``
-    (UNICODE_CHARACTER_CLASS): Java's bare ``\\s`` is ASCII-only while
-    Python's ``re`` is Unicode-aware — without the flag, Unicode
-    whitespace (NBSP ``\\u00a0``, thin space ``\\u2009``, line sep
-    ``\\u2028``) partitions differently here than at encode time and
-    counts-trained merges silently diverge. The residual asymmetry runs
-    the OTHER way: Python's ``\\s`` also matches U+001C–U+001F (bidi
-    B/S controls, White_Space=No), which Java's ``(?U)\\s`` does not —
-    so ``_PRETOKEN_RE`` pins its whitespace class to the Unicode
-    White_Space property too. Parity is exact and law-tested with
-    non-ASCII whitespace AND U+001C–U+001F in ``test_bpe.py``. The
-    result is vocabulary-sized (Zipf — distinct pre-tokens ≪ token
-    stream), not corpus-sized."""
-    t = F.col(text_col).cast("string")
-    if max_chars_per_doc is not None:
-        t = F.substring(t, 1, max_chars_per_doc)
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(
-            F.explode(
-                F.regexp_extract_all(t, F.lit(r"(?U)\S+|\s+"), 0)
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def update_bpe_counts(counts: DataFrame, new_docs: DataFrame, **kwargs) -> DataFrame:
-    """Fold a new document shard into an existing (word, n) counts
-    frame WITHOUT rescanning the old corpus — counts are additive, so
-    ``update == recount-on-concatenation`` EXACTLY (law-tested). The
-    ``update_char_lm`` / ``update_dsir`` mergeable-statistic shape."""
-    return (
-        counts.unionByName(bpe_word_counts(new_docs, **kwargs))
-        .groupBy("word")
-        .agg(F.sum("n").alias("n"))
-    )
-
-
-def train_bpe_from_counts(
-    counts: DataFrame,
-    vocab_size: int = 512,
-    max_words: int | None = 65_536,
-) -> list[tuple[bytes, bytes]]:
-    """BPE training from a distributed (word, n) counts frame —
-    corpus-exact up to the ``max_words`` head: collect the ``max_words``
-    most frequent pre-tokens (count DESC, word ASC — a deterministic
-    distributed top-k via TakeOrderedAndProject, never a global sort)
-    and run the same deterministic merge loop as :func:`train_bpe`. The
-    dropped tail is singleton-grade PER WORD, but its aggregate pair
-    mass (pair counts summed across many rare words) can in principle
-    tip a close merge race — pass ``max_words=None`` to collect the
-    full vocabulary-sized counts frame for truly corpus-exact merges
-    (safe when distinct pre-tokens fit on the driver, which Zipf makes
-    common; the head cap is the bounded-driver-artifact default).
-
-    Use when merge statistics must reflect the whole corpus rather than
-    the driver sample: the shuffle is one count agg over pre-tokens,
-    the collect is ``max_words`` rows (or all distinct pre-tokens when
-    None). Same determinism contract: identical counts → identical
-    merge table."""
-    if max_words is not None:
-        # top-k: TakeOrderedAndProject, never a global sort
-        rows = (
-            counts.orderBy(F.col("n").desc(), F.col("word"))
-            .limit(max_words)
-            .collect()
-        )
-    else:
-        # full collect: no sort needed — the merge loop is
-        # order-independent (count + lexicographic tie-break)
-        rows = counts.collect()
-    word_freq: Counter = Counter({r["word"]: r["n"] for r in rows})
-    return _merges_from_word_freq(word_freq, vocab_size)
-
-
 def _merges_from_word_freq(
     word_freq: Counter, vocab_size: int
 ) -> list[tuple[bytes, bytes]]:
-    """The deterministic merge loop shared by the driver-sample and
-    distributed-counts training paths: highest pair count wins, ties
+    """The deterministic merge loop behind :func:`train_bpe`: highest
+    pair count wins, ties
     break to the lexicographically smallest (left, right) byte pair;
     stops early when no pair occurs twice. Pair counting is incremental
     (only words containing the merged pair are touched per round)."""
@@ -244,29 +144,6 @@ def _merge_seq(
             out.append(seq[i])
             i += 1
     return tuple(out)
-
-
-def save_merges(merges: list[tuple[bytes, bytes]], path: str) -> None:
-    """Persist the merge table as JSON (hex-encoded byte pairs) — the
-    tokenizer artifact a training pipeline versions alongside the data.
-    Atomic write (temp + rename), same contract as the index sidecars."""
-    import json
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump([[a.hex(), b.hex()] for a, b in merges], fh)
-    os.replace(tmp, path)
-
-
-def load_merges(path: str) -> list[tuple[bytes, bytes]]:
-    """Inverse of :func:`save_merges`; round-trip is law-tested."""
-    import json
-
-    with open(path) as fh:
-        return [
-            (bytes.fromhex(a), bytes.fromhex(b)) for a, b in json.load(fh)
-        ]
 
 
 def build_vocab(merges: list[tuple[bytes, bytes]]) -> dict[bytes, int]:

@@ -387,80 +387,6 @@ def _band_entries(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
-def _chained_mass_expr(m, max_bucket: int | None):
-    """Per-bucket candidate mass: m·(m−1)/2, or m−1 above the
-    representative-chaining ceiling."""
-    per_bucket = m * (m - 1) / 2
-    if max_bucket is not None:
-        per_bucket = F.when(m > max_bucket, (m - 1).cast("double")).otherwise(
-            per_bucket
-        )
-    return per_bucket
-
-
-def _raise_lsh_budget(
-    mass: int,
-    n_buckets: int,
-    max_m: int,
-    max_candidate_pairs: int,
-    max_bucket: int | None,
-    bands: int,
-    rows: int,
-    threshold: float,
-) -> None:
-    raise RuntimeError(
-        f"LSH candidate budget exceeded: {mass} candidate pairs "
-        f"(budget {max_candidate_pairs}) at banding {bands} bands x "
-        f"{rows} rows, threshold {threshold} "
-        f"({n_buckets} colliding buckets, largest "
-        f"{max_m} docs, max_bucket={max_bucket}). Options: "
-        f"(a) fewer/wider bands (rows per band up) raises the "
-        f"collision s-curve and cuts candidate mass, (b) set or "
-        f"lower max_bucket to verify giant buckets by "
-        f"representative chaining (m-1 comparisons), (c) raise "
-        f"max_candidate_pairs if the mass is genuinely budgeted."
-    )
-
-
-def _lsh_candidate_budget_check(
-    banded: DataFrame,
-    max_candidate_pairs: int,
-    max_bucket: int | None,
-    bands: int,
-    rows: int,
-    threshold: float,
-) -> None:
-    """Fail-fast candidate-mass guard: one count aggregation over the
-    band entries (Σ m·(m−1)/2 per colliding bucket — or m−1 for buckets
-    above the chaining ceiling) BEFORE any verify work runs. A
-    boilerplate-dense corpus at a recall-tuned banding can put millions
-    of pairs through the verify step; this turns a multi-minute (at
-    100 TB: multi-hour) surprise into an immediate error that carries
-    the measured mass and the banding recipe. (The grouped verify path
-    folds this check into its collision-stats collect instead of
-    calling here — one aggregation serves guard + shuffle sizing.)"""
-    m = F.col("m")
-    stat = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .filter(m >= 2)
-        .agg(
-            F.coalesce(
-                F.sum(_chained_mass_expr(m, max_bucket)), F.lit(0.0)
-            ).alias("mass"),
-            F.coalesce(F.max("m"), F.lit(0)).alias("max_m"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        )
-        .collect()[0]
-    )
-    mass = int(stat["mass"])
-    if mass > max_candidate_pairs:
-        _raise_lsh_budget(
-            mass, int(stat["n_buckets"]), int(stat["max_m"]),
-            max_candidate_pairs, max_bucket, bands, rows, threshold,
-        )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -471,9 +397,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     char_level: bool = True,
     pin: bool = True,
-    verify: str = "grouped",
-    max_bucket: int | None = None,
-    sig_margin: float | None = None,
     max_candidate_pairs: int | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, exact-Jaccard verified
@@ -481,9 +404,9 @@ def minhash_lsh_pairs(
 
     Cache lifetime: ``pin=True`` (default) eagerly materializes the
     small pair output (``localCheckpoint``) and unpersists BOTH internal
-    caches — the signature/gram frame and, in grouped mode, the
-    collision-stats frame (``bstats``, the per-(band, bucket) size agg
-    that serves the budget guard and pins the verify shuffle degree).
+    caches — the signature/gram frame and the collision-stats frame
+    (``bstats``, the per-(band, bucket) size agg that serves the budget
+    guard and pins the verify shuffle degree).
     ``pin=False`` returns a LAZY plan that still references both frames,
     so both stay persisted for the plan's lifetime; no handle to them is
     returned, so the caller releases them via
@@ -495,226 +418,151 @@ def minhash_lsh_pairs(
     matches exactly. Candidates are verified with exact gram Jaccard, so
     the output has no false positives — LSH only bounds recall.
 
-    ``verify`` picks the verification strategy (identical pair set,
-    law-tested in tests/test_dedup.py):
+    Verify: per-bucket Arrow kernel (``mapInPandas`` over (band,
+    bucket)-sorted partitions) — each colliding doc's gram array is
+    shuffled ONCE PER BUCKET MEMBERSHIP (Σ m rows), never once per
+    candidate pair (Σ m²/2 rows), and the m²/2-row candidate self-join
+    disappears entirely; ``distinct`` runs on the small PASSING pair
+    set. Measured at the 10x scale step's recall-tuned operating point
+    (sf10, 500k docs, 5.3M candidates): candidate-join verify 131 s →
+    grouped 30 s, same pairs (the join verify is the reference the
+    kernel is law-tested against in tests/test_dedup.py). Zero-gram
+    docs (text shorter than n) are filtered before bucketing: they
+    share the sentinel signature, so at web scale they form ONE
+    corpus-wide bucket per band; their Jaccard is 0/0, which a verify
+    drops anyway, so filtering preserves the pair set.
 
-    - ``"grouped"`` (default): per-bucket Arrow kernel
-      (``applyInPandas`` over (band, bucket)) — each colliding doc's
-      gram array is shuffled ONCE PER BUCKET MEMBERSHIP (Σ m rows),
-      never once per candidate pair (Σ m²/2 rows), and the m²/2-row
-      candidate self-join disappears entirely; ``distinct`` runs on the
-      small PASSING pair set. Measured at the 10x scale step's
-      recall-tuned operating point (sf10, 500k docs, 5.3M candidates):
-      join verify 131 s → grouped 30 s, same pairs. Zero-gram docs
-      (text shorter than n) are filtered before bucketing: they share
-      the sentinel signature, so at web scale they form ONE corpus-wide
-      bucket per band (a skew bomb the join path paid as m²/2 NULL-
-      verdict candidates); the join path's inline 0/0→NULL Jaccard
-      drops those pairs anyway, so filtering preserves the pair set.
-    - ``"join"``: the classic candidates-then-gram-join pipeline —
-      kept for A/B and for engines where Python workers are
-      unavailable; ignores ``max_bucket``/``sig_margin``.
-
-    Scale knobs (both preserve "no false positives"; both are recall-
-    side and off by default so the default output is exactly the
-    banded-collision ∩ exact-Jaccard set):
-
-    - ``max_bucket``: buckets larger than this are verified by
-      REPRESENTATIVE CHAINING — the bucket's min id is exact-verified
-      against each other member (m−1 comparisons instead of m²/2). A
-      bucket whose members share a full band slice is overwhelmingly
-      one duplicate family; downstream ``connected_components`` (the
-      consumer of this operator's output) restores the family's pair
-      closure from the star edges. Deviation: a pair (x, y) in a giant
-      bucket with J(x,y) ≥ threshold but J(rep,·) < threshold for x or
-      y is missed — bounded-recall trade, law-tested (chained ⊆
-      unbounded; component equality on dup-family fixtures).
-    - ``sig_margin``: estimate-first cascade inside the kernel — a
-      pair's Jaccard is first estimated from the already-computed
-      MinHash signatures (matching-position fraction, unbiased); pairs
-      estimating below ``threshold − sig_margin`` skip the exact gram
-      intersection. False-negative probability per true pair is
-      ≤ exp(−2·sig_margin²·num_hashes) (Hoeffding; ≈1e-4 at margin 0.35
-      with 64 hashes, ≈0.6% at 0.2) — worthwhile when docs are long
-      (grams ≫ num_hashes); at gram counts comparable to num_hashes
-      the estimate costs what it saves, leave it off.
-
-    ``max_candidate_pairs``: fail-fast budget guard — one count
-    aggregation over the band entries raises BEFORE any verify work if
-    the candidate mass (Σ m·(m−1)/2, or m−1 above the chaining ceiling)
-    exceeds the budget, naming the measured mass and the banding
-    recipe. Use it anywhere a recall-tuned banding meets an
+    ``max_candidate_pairs``: fail-fast budget guard — raises BEFORE any
+    verify work if the candidate mass (Σ m·(m−1)/2 over colliding
+    buckets) exceeds the budget, naming the measured mass and the
+    banding recipe. Use it anywhere a recall-tuned banding meets an
     uncurated corpus.
 
     Scale: the bucket shuffle keys on (band, band_hash) — web-scale safe
-    because bucket sizes concentrate around duplicates; the three knobs
-    above are the answer for corpora where they don't (boilerplate-
-    dense web crawls). The grouped verify's shuffle degree is PINNED
-    from the collision stats (candidate mass / colliding member rows)
-    rather than inherited from ``spark.sql.shuffle.partitions`` or AQE
-    coalescing, so the verify plan is identical run-to-run and scales
-    its task count with the measured work, not a static config.
+    because bucket sizes concentrate around duplicates; the budget guard
+    is the answer for corpora where they don't (boilerplate-dense web
+    crawls). The verify's shuffle degree is PINNED from the collision
+    stats (candidate mass / colliding member rows) rather than inherited
+    from ``spark.sql.shuffle.partitions`` or AQE coalescing, so the
+    verify plan is identical run-to-run and scales its task count with
+    the measured work, not a static config.
     """
-    if verify not in ("grouped", "join"):
-        raise ValueError(f"verify must be 'grouped' or 'join', got {verify!r}")
     rows = num_hashes // bands
     sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
     sigs = sigs.persist()
 
-    if verify == "grouped":
-        # zero-gram docs share the sentinel signature: one corpus-wide
-        # bucket per band. Their pairs can never pass (join path: 0/0
-        # Jaccard = NULL, dropped) — exclude them BEFORE bucketing so
-        # the sentinel bucket never materializes.
-        gram_cols = ["id", "grams"] + (["sig"] if sig_margin is not None else [])
-        nonempty = sigs.select(*gram_cols).filter(F.size("grams") > 0)
-        banded = _band_entries(
-            sigs.filter(F.size("grams") > 0), bands, rows
+    # zero-gram docs share the sentinel signature: one corpus-wide
+    # bucket per band. Their pairs can never pass (0/0 Jaccard) —
+    # exclude them BEFORE bucketing so the sentinel bucket never
+    # materializes.
+    nonempty = sigs.select("id", "grams").filter(F.size("grams") > 0)
+    banded = _band_entries(sigs.filter(F.size("grams") > 0), bands, rows)
+    # singleton buckets (the overwhelming majority) drop here while
+    # rows are still (id, band, bucket) — a count agg whose result
+    # is collision-sized (AQE broadcasts it back); gram arrays join
+    # in ONLY for the colliding survivor set, so no shuffle ever
+    # moves documents for non-colliding entries. The stats frame is
+    # persisted and driver-summarized ONCE: the same aggregation
+    # serves the fail-fast budget guard AND pins the verify
+    # shuffle's partition count (below).
+    bstats = (
+        banded.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("bsize"))
+        .filter(F.col("bsize") >= 2)
+        .persist()
+    )
+    bs = F.col("bsize")
+    summ = bstats.agg(
+        F.coalesce(F.sum(bs * (bs - 1) / 2), F.lit(0.0)).alias("mass"),
+        F.coalesce(F.max(bs), F.lit(0)).alias("max_m"),
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.coalesce(F.sum(bs), F.lit(0)).alias("members"),
+    ).collect()[0]
+    mass, members_n = int(summ["mass"]), int(summ["members"])
+    if max_candidate_pairs is not None and mass > max_candidate_pairs:
+        sigs.unpersist()
+        bstats.unpersist()
+        raise RuntimeError(
+            f"LSH candidate budget exceeded: {mass} candidate pairs "
+            f"(budget {max_candidate_pairs}) at banding {bands} bands x "
+            f"{rows} rows, threshold {threshold} "
+            f"({summ['n_buckets']} colliding buckets, largest "
+            f"{summ['max_m']} docs). Options: "
+            f"(a) fewer/wider bands (rows per band up) raises the "
+            f"collision s-curve and cuts candidate mass, (b) raise "
+            f"max_candidate_pairs if the mass is genuinely budgeted."
         )
-        # singleton buckets (the overwhelming majority) drop here while
-        # rows are still (id, band, bucket) — a count agg whose result
-        # is collision-sized (AQE broadcasts it back); gram arrays join
-        # in ONLY for the colliding survivor set, so no shuffle ever
-        # moves documents for non-colliding entries. The stats frame is
-        # persisted and driver-summarized ONCE: the same aggregation
-        # serves the fail-fast budget guard AND pins the verify
-        # shuffle's partition count (below), so the guard costs nothing
-        # extra in grouped mode.
-        bstats = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("bsize"))
-            .filter(F.col("bsize") >= 2)
-            .persist()
-        )
-        bs = F.col("bsize")
-        summ = bstats.agg(
-            F.coalesce(
-                F.sum(_chained_mass_expr(bs, max_bucket)), F.lit(0.0)
-            ).alias("mass"),
-            F.coalesce(F.max(bs), F.lit(0)).alias("max_m"),
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.coalesce(F.sum(bs), F.lit(0)).alias("members"),
-        ).collect()[0]
-        mass, members_n = int(summ["mass"]), int(summ["members"])
-        if max_candidate_pairs is not None and mass > max_candidate_pairs:
-            sigs.unpersist()
-            bstats.unpersist()
-            _raise_lsh_budget(
-                mass, int(summ["n_buckets"]), int(summ["max_m"]),
-                max_candidate_pairs, max_bucket, bands, rows, threshold,
-            )
-        # verify-shuffle degree PINNED from the collision stats instead
-        # of inheriting spark.sql.shuffle.partitions / AQE coalescing
-        # (run-to-run plan variance): balance by candidate mass (the
-        # kernel's work unit, ~100k exact-Jaccard comparisons per task)
-        # with a member-row floor (gram-array shuffle volume, ~25k
-        # member rows per task). The spread-work floor is ~1k member
-        # rows per task up to the cluster parallelism — data-derived,
-        # so a small collision set no longer fans out to 32 near-empty
-        # Arrow tasks just because 32 cores exist (r12: 6.8k members
-        # at sf0.1 → 7 tasks, verify 1.0-1.4 s → 0.8 s, identical
-        # pairs), while any corpus with ≥1k members/core still uses
-        # every core. An explicit numPartitions also stops AQE from
-        # re-coalescing the exchange differently across runs.
-        nparts = min(
-            4096,
-            max(
-                min(
-                    docs.sparkSession.sparkContext.defaultParallelism,
-                    -(-members_n // 1_000),
-                ),
-                -(-mass // 100_000),
-                -(-members_n // 25_000),
-                1,
+    # verify-shuffle degree PINNED from the collision stats instead
+    # of inheriting spark.sql.shuffle.partitions / AQE coalescing
+    # (run-to-run plan variance): balance by candidate mass (the
+    # kernel's work unit, ~100k exact-Jaccard comparisons per task)
+    # with a member-row floor (gram-array shuffle volume, ~25k
+    # member rows per task). The spread-work floor is ~1k member
+    # rows per task up to the cluster parallelism — data-derived,
+    # so a small collision set no longer fans out to 32 near-empty
+    # Arrow tasks just because 32 cores exist (r12: 6.8k members
+    # at sf0.1 → 7 tasks, verify 1.0-1.4 s → 0.8 s, identical
+    # pairs), while any corpus with ≥1k members/core still uses
+    # every core. An explicit numPartitions also stops AQE from
+    # re-coalescing the exchange differently across runs.
+    nparts = min(
+        4096,
+        max(
+            min(
+                docs.sparkSession.sparkContext.defaultParallelism,
+                -(-members_n // 1_000),
             ),
-        )
-        members = banded.join(
-            bstats.select("band", "bucket"), ["band", "bucket"]
-        ).join(nonempty, "id")
+            -(-mass // 100_000),
+            -(-members_n // 25_000),
+            1,
+        ),
+    )
+    members = banded.join(
+        bstats.select("band", "bucket"), ["band", "bucket"]
+    ).join(nonempty, "id")
 
-        id_dt = sigs.schema["id"].dataType.simpleString()
-        kern = _bucket_verify_stream_kernel(threshold, max_bucket, sig_margin)
-        # mapInPandas over (band, bucket)-sorted partitions instead of
-        # applyInPandas: one pandas frame per ~10k-row Arrow batch, not
-        # one per bucket — per-group frame construction dominated on
-        # small-bucket corpora (measured sf1: 45 s applyInPandas ->
-        # 5.3 s streaming, join-verify parity; sf10 recall point:
-        # 34 s vs 131 s join verify).
-        verified = (
-            members.repartition(nparts, "band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .mapInPandas(kern, f"id_a {id_dt}, id_b {id_dt}")
-            .distinct()
+    id_dt = sigs.schema["id"].dataType.simpleString()
+    # mapInPandas over (band, bucket)-sorted partitions instead of
+    # applyInPandas: one pandas frame per ~10k-row Arrow batch, not
+    # one per bucket — per-group frame construction dominated on
+    # small-bucket corpora (measured sf1: 45 s applyInPandas ->
+    # 5.3 s streaming, join-verify parity; sf10 recall point:
+    # 34 s vs 131 s join verify).
+    verified = (
+        members.repartition(nparts, "band", "bucket")
+        .sortWithinPartitions("band", "bucket")
+        .mapInPandas(
+            _bucket_verify_stream_kernel(threshold), f"id_a {id_dt}, id_b {id_dt}"
         )
-    else:
-        banded = _band_entries(sigs, bands, rows)
-        if max_candidate_pairs is not None:
-            _lsh_candidate_budget_check(
-                banded, max_candidate_pairs, None, bands, rows, threshold
-            )
-        la, lb = banded.alias("a"), banded.alias("b")
-        candidates = (
-            la.join(lb, ["band", "bucket"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-
-        ga = sigs.select(
-            F.col("id").alias("id_a"), F.col("grams").alias("grams_a")
-        )
-        gb = sigs.select(
-            F.col("id").alias("id_b"), F.col("grams").alias("grams_b")
-        )
-        verified = (
-            candidates.join(ga, "id_a")
-            .join(gb, "id_b")
-            .withColumn(
-                "jac",
-                # try_divide: two zero-gram docs (sentinel-signature
-                # collision) yield 0/0 → NULL → dropped, instead of an
-                # ANSI-mode DIVIDE_BY_ZERO crash
-                F.try_divide(
-                    F.size(F.array_intersect("grams_a", "grams_b")),
-                    F.size(F.array_union("grams_a", "grams_b")),
-                ),
-            )
-            .filter(F.col("jac") >= threshold)
-            .select("id_a", "id_b")
-        )
+        .distinct()
+    )
     # pin the (small) verified pairs eagerly, release the signature cache
     if pin:
         verified = verified.localCheckpoint(eager=True)
         sigs.unpersist()
-        if verify == "grouped":
-            bstats.unpersist()
+        bstats.unpersist()
     return verified
 
 
-def _bucket_verify_stream_kernel(
-    threshold: float, max_bucket: int | None, sig_margin: float | None
-):
+def _bucket_verify_stream_kernel(threshold: float):
     """Streaming per-bucket exact-Jaccard verify for
-    :func:`minhash_lsh_pairs`'s grouped strategy: a ``mapInPandas``
-    kernel over partitions sorted by (band, bucket). Buckets are cut at
-    sort change-points inside each Arrow batch (a bucket spanning batch
-    boundaries is carried forward — memory is bounded by the largest
-    single bucket, the same bound ``applyInPandas`` had); emits the
-    (id_a < id_b) pairs whose exact gram Jaccard ≥ threshold.
+    :func:`minhash_lsh_pairs`: a ``mapInPandas`` kernel over partitions
+    sorted by (band, bucket). Buckets are cut at sort change-points
+    inside each Arrow batch (a bucket spanning batch boundaries is
+    carried forward — memory is bounded by the largest single bucket,
+    the same bound ``applyInPandas`` had); emits the (id_a < id_b)
+    pairs whose exact gram Jaccard ≥ threshold.
     Python-side set intersection over the deduped gram arrays — the
     shuffle saving (grams once per bucket membership, not per candidate
     pair) dwarfs the interpreted pair loop, which runs on
     collision-sized groups only. Deterministic: members sorted by id
-    within each bucket, so chaining's representative is the bucket min
-    and emitted pairs are canonical."""
-    est_floor = threshold - sig_margin if sig_margin is not None else None
+    within each bucket, so emitted pairs are canonical."""
 
     def _emit(frame: pd.DataFrame) -> pd.DataFrame:
         b = frame["band"].to_numpy()
         k = frame["bucket"].to_numpy()
         ids_all = frame["id"].to_numpy()
         grams_all = frame["grams"].to_numpy()
-        sig_all = frame["sig"].to_numpy() if sig_margin is not None else None
         cuts = np.flatnonzero((b[1:] != b[:-1]) | (k[1:] != k[:-1])) + 1
         starts = np.concatenate(([0], cuts))
         ends = np.concatenate((cuts, [len(frame)]))
@@ -726,57 +574,15 @@ def _bucket_verify_stream_kernel(
                 continue
             order = np.argsort(ids_all[s:e], kind="stable") + s
             ids = ids_all[order]
-            if sig_all is None:
-                # exact-only path: grams materialize for every member
-                grams = [frozenset(grams_all[i]) for i in order]
-            else:
-                # cascade path: frozensets build LAZILY — only members
-                # reaching an exact verify pay the set construction
-                # (on a boilerplate-light corpus the estimate kills
-                # most candidates, so most members never build one)
-                grams = [None] * m
-                sigm = np.array([np.asarray(sig_all[i]) for i in order])
-
-            def gset(i: int) -> frozenset:
-                g = grams[i]
-                if g is None:
-                    g = grams[i] = frozenset(grams_all[order[i]])
-                return g
-
-            def check(i: int, j: int) -> None:
-                ga, gb = gset(i), gset(j)
-                inter = len(ga & gb)
-                if inter / (len(ga) + len(gb) - inter) >= threshold:
-                    out_a.append(ids[i])
-                    out_b.append(ids[j])
-
-            chained = max_bucket is not None and m > max_bucket
-            # row-sweep the signature estimate: ONE vectorized numpy
-            # comparison of member i against all later members (the
-            # per-PAIR numpy call this replaces cost more than the
-            # frozenset intersection it skipped — measured x1.75 SLOWER
-            # than no cascade at the sf10 recall point; the sweep makes
-            # the estimate ~free, m array ops per bucket, not m²/2)
-            if chained:
-                if sig_all is not None:
-                    ok = (sigm[1:] == sigm[0]).mean(axis=1) >= est_floor
-                    js = (np.flatnonzero(ok) + 1).tolist()
-                else:
-                    js = range(1, m)
-                for j in js:  # representative chain on min id
-                    check(0, j)
-            else:
-                for i in range(m - 1):
-                    if sig_all is not None:
-                        ok = (
-                            (sigm[i + 1:] == sigm[i]).mean(axis=1)
-                            >= est_floor
-                        )
-                        js = (np.flatnonzero(ok) + i + 1).tolist()
-                    else:
-                        js = range(i + 1, m)
-                    for j in js:
-                        check(i, j)
+            grams = [frozenset(grams_all[i]) for i in order]
+            for i in range(m - 1):
+                ga = grams[i]
+                for j in range(i + 1, m):
+                    gb = grams[j]
+                    inter = len(ga & gb)
+                    if inter / (len(ga) + len(gb) - inter) >= threshold:
+                        out_a.append(ids[i])
+                        out_b.append(ids[j])
         return pd.DataFrame({"id_a": out_a, "id_b": out_b})
 
     def verify(batches):
@@ -816,10 +622,9 @@ def lsh_bucket_stats(
 ) -> DataFrame:
     """(band, bucket, n_docs) occupancy of every non-singleton LSH
     bucket under the given banding — the candidate-mass telemetry for
-    :func:`minhash_lsh_pairs` (``ivf_cell_stats``'s analogue for the
-    dedup family). One signature pass + one count agg; singleton
-    buckets (the overwhelming majority) are filtered out, so the result
-    is collision-sized, not corpus-sized."""
+    :func:`minhash_lsh_pairs`. One signature pass + one count agg;
+    singleton buckets (the overwhelming majority) are filtered out, so
+    the result is collision-sized, not corpus-sized."""
     rows = num_hashes // bands
     sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
     return (
@@ -830,47 +635,21 @@ def lsh_bucket_stats(
     )
 
 
-def lsh_index_bucket_stats(spark, path: str) -> DataFrame:
-    """Bucket occupancy straight from a PERSISTED LSH index's bands
-    table — no signature recompute (the cheap face for monitoring a
-    live incremental index)."""
-    from .index_pointer import resolve_table
-
-    return (
-        spark.read.parquet(resolve_table(path, "bands"))
-        .groupBy("band", "bucket")
-        .agg(F.count_distinct("id").alias("n_docs"))
-        .filter(F.col("n_docs") >= 2)
-    )
-
-
-def lsh_bucket_balance(stats: DataFrame, max_bucket: int | None = None) -> dict:
-    """Driver summary over :func:`lsh_bucket_stats` /
-    :func:`lsh_index_bucket_stats` — a bounded aggregation collect (one
-    row), never the bucket rows themselves:
+def lsh_bucket_balance(stats: DataFrame) -> dict:
+    """Driver summary over :func:`lsh_bucket_stats` — a bounded
+    aggregation collect (one row), never the bucket rows themselves:
 
     - ``candidate_pairs``: Σ n·(n−1)/2 over colliding buckets — THE
-      pre-flight cost predictor for the verify join (the 100x scale
-      step measured this growing ~quadratically in duplicate-family
-      size at a recall-oriented banding; re-band — or set
-      ``minhash_lsh_pairs``'s chaining ceiling — until this number fits
-      the budget, THEN run the pair join);
+      pre-flight cost predictor for the verify (it grows ~quadratically
+      in duplicate-family size at a recall-oriented banding; re-band
+      until this number fits the budget, THEN run the pair verify) —
+      the same accounting ``minhash_lsh_pairs``' ``max_candidate_pairs``
+      guard applies;
     - ``n_buckets`` (colliding), ``max_bucket``, ``mean_bucket``.
-
-    Pass ``max_bucket`` (the chaining ceiling you would hand
-    ``minhash_lsh_pairs``) to get the BOUNDED path's mass — buckets
-    above the ceiling count m−1 representative-chain comparisons
-    instead of m·(m−1)/2 — i.e. exactly the accounting the in-operator
-    ``max_candidate_pairs`` guard applies.
     """
     n = F.col("n_docs")
-    per_bucket = n * (n - 1) / 2
-    if max_bucket is not None:
-        per_bucket = F.when(
-            n > max_bucket, (n - 1).cast("double")
-        ).otherwise(per_bucket)
     row = stats.agg(
-        F.coalesce(F.sum(per_bucket), F.lit(0.0)).alias("cp"),
+        F.coalesce(F.sum(n * (n - 1) / 2), F.lit(0.0)).alias("cp"),
         F.count(F.lit(1)).alias("nb"),
         F.coalesce(F.max("n_docs"), F.lit(0)).alias("mx"),
         F.coalesce(F.avg("n_docs"), F.lit(0.0)).alias("mean"),
@@ -1437,366 +1216,6 @@ def connected_components_star(
 
 
 # ---------------------------------------------------------------------------
-# incremental dedup: persisted MinHash-LSH index for a growing corpus
-# ---------------------------------------------------------------------------
-
-
-def _write_index_state(
-    sigs: DataFrame, path: str, bands: int, rows: int, mode: str
-) -> None:
-    """Persist LSH state as two tables, GRAMS FIRST then BANDS.
-
-    The two writes are not atomic; the order makes a crash between them
-    safe: an id present in grams but absent from bands simply generates
-    no candidates (as if the append never happened) and the replay
-    re-appends it. The reverse order would leave band entries whose
-    gram lookup fails — candidates silently vanishing in the verify
-    join; ``dedup_increment`` additionally fails loudly on that state.
-    """
-    from .index_pointer import append_commit_check, resolve_table, writer_guard
-
-    writer_guard(path, "grams")
-    writer_guard(path, "bands")
-    grams_dir = resolve_table(path, "grams")
-    bands_dir = resolve_table(path, "bands")
-    sigs.select("id", "grams", "fp").write.mode(mode).parquet(grams_dir)
-    _band_entries(sigs, bands, rows).write.mode(mode).partitionBy(
-        "band"
-    ).parquet(bands_dir)
-    # post-write: close the guard's check-then-write window (a
-    # compaction that started during the two Spark writes above)
-    append_commit_check(path, "grams", grams_dir)
-    append_commit_check(path, "bands", bands_dir)
-
-
-def build_minhash_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    char_level: bool = True,
-) -> None:
-    """Persist the LSH state of a corpus so future shards dedup against
-    it WITHOUT re-scanning the corpus: ``<path>/bands`` (band, bucket,
-    id; partitioned by band) and ``<path>/grams`` (id, grams — stored
-    once, NOT per band entry, so gram storage is O(corpus), not
-    O(corpus×bands)). Signatures are deterministic (seeded hash family),
-    so entries appended later by ``dedup_increment`` are mutually
-    consistent with these."""
-    rows = num_hashes // bands
-    sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
-    sigs = sigs.persist()
-    _write_index_state(sigs, path, bands, rows, "overwrite")
-    sigs.unpersist()
-
-
-def append_minhash_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    char_level: bool = True,
-) -> None:
-    """Append the given docs' LSH state to an existing index (same
-    deterministic signature family as ``build_minhash_index``). Used by
-    callers that must order their own durable write BEFORE the index
-    append (see streaming/cdc.DedupIngestMaintainer) — the index must
-    only learn about documents that are already committed downstream, or
-    a replay after a mid-batch crash sees every doc match its own
-    indexed copy and silently drops it."""
-    rows = num_hashes // bands
-    sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
-    sigs = sigs.persist()
-    _write_index_state(sigs, path, bands, rows, "append")
-    sigs.unpersist()
-
-
-def _verify_jaccard(ga, gb, fp_a, fp_b):
-    """Gram-set Jaccard for candidate verification. Both-empty compares
-    CANONICAL-TEXT FINGERPRINTS (1.0 iff equal): the naive
-    size(∩)/size(∪) yields 0/0 = NULL there, which a >= threshold filter
-    silently drops — zero-gram docs (empty/whitespace text, or text
-    shorter than n) share the sentinel MinHash signature, so they always
-    bucket-collide, including with their own indexed copy on a replay,
-    and a NULL verdict would let every replay re-append them forever. A
-    blanket 1.0 would be the opposite failure: DISTINCT sub-n documents
-    ("xy" vs "qz") silently collapsing into one — real data loss."""
-    return F.when(
-        (F.size(ga) == 0) & (F.size(gb) == 0),
-        F.when(fp_a == fp_b, F.lit(1.0)).otherwise(F.lit(0.0)),
-    ).otherwise(F.size(F.array_intersect(ga, gb)) / F.size(F.array_union(ga, gb)))
-
-
-def dedup_increment(
-    new_docs: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    threshold: float = 0.5,
-    char_level: bool = True,
-    update_index: bool = True,
-    max_candidate_pairs: int | None = None,
-) -> dict[str, DataFrame]:
-    """Dedup a NEWLY LANDED shard against the persisted index + itself,
-    and (by default) append the surviving docs' LSH state to the index —
-    the daily-ingest shape at 100 TB, where the existing corpus is only
-    touched through the (band, bucket)-bucketed index join + a gram
-    lookup for candidate ids, never re-signatured.
-
-    Returns:
-      - ``pairs_old``: (id_new, id_old) verified dups vs the corpus
-      - ``pairs_new``: (id_a, id_b) verified dups within the shard
-      - ``survivors``: new docs that match no corpus doc and no
-        smaller-id shard doc. Direct-match semantics: on transitive
-        CHAINS (a~b, b~c, a≁c) this keeps more than the batch
-        connected-components dedup — for chain-y corpora run
-        ``connected_components`` over the returned pairs instead.
-        Idempotence law (pytest-pinned): incrementing the same shard
-        again yields zero survivors — including for ZERO-GRAM documents
-        (empty/whitespace text, or text shorter than n), whose verify
-        compares canonical-text fingerprints when both gram sets are
-        empty: identical short docs dedup (and replays match their own
-        indexed copy — the naive 0/0 = NULL verdict would re-append them
-        forever), while DISTINCT sub-n docs never collapse.
-
-    Candidate generation is IDENTICAL to the batch ``minhash_lsh_pairs``
-    (same seeded hash family, same banding), so incremental pair recall
-    equals the batch run's — pinned by the parity test.
-
-    ``max_candidate_pairs``: fail-fast budget guard — when set, one
-    count aggregation measures the batch's candidate mass
-    (Σ over colliding buckets of m_new·m_old + m_new·(m_new−1)/2,
-    shard-vs-index plus within-shard) BEFORE the verify joins run, and
-    raises with the measured mass and the banding recipe if over
-    budget — one boilerplate-heavy shard at a recall-tuned banding
-    should be a one-line error, not a stalled ingest. The measured
-    telemetry is returned under the ``"telemetry"`` key (a plain dict:
-    ``candidate_mass``, ``n_buckets``, ``max_new``, ``max_old``);
-    ``None`` when the guard is off (no extra index scan). ``n_buckets``
-    counts MASS-CONTRIBUTING buckets only (an index collision, or ≥2
-    shard members) — the batch guard's colliding-bucket semantics, not
-    every shard (band, bucket) group.
-    """
-    spark = new_docs.sparkSession
-    rows = num_hashes // bands
-    sigs = minhash_signature(
-        new_docs, id_col, text_col, num_hashes, n, char_level
-    ).persist()
-    banded_new = _band_entries(sigs, bands, rows).persist()
-
-    from .index_pointer import resolve_table
-
-    idx_bands = spark.read.parquet(resolve_table(index_path, "bands"))
-    idx_grams = spark.read.parquet(resolve_table(index_path, "grams"))
-
-    telemetry = None
-    if max_candidate_pairs is not None:
-        new_cnt = banded_new.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("m_new")
-        )
-        # count_distinct: duplicate index rows (benign replayed-append
-        # residue, see the loud-guard comment below) must not inflate mass
-        old_cnt = idx_bands.groupBy("band", "bucket").agg(
-            F.count_distinct("id").alias("m_old")
-        )
-        mn, mo = F.col("m_new"), F.coalesce(F.col("m_old"), F.lit(0))
-        stat = (
-            new_cnt.join(old_cnt, ["band", "bucket"], "left")
-            # mass-contributing buckets only (m_new·m_old + m_new·(m_new−1)/2
-            # > 0 ⇔ index collision or ≥2 shard members) — singleton shard
-            # buckets with zero candidate mass are excluded so n_buckets
-            # matches the batch guard's colliding-bucket semantics
-            .filter((mo >= 1) | (mn >= 2))
-            .agg(
-                F.coalesce(
-                    F.sum(mn * mo + mn * (mn - 1) / 2), F.lit(0.0)
-                ).alias("mass"),
-                F.coalesce(F.max(mn), F.lit(0)).alias("max_new"),
-                F.coalesce(F.max(mo), F.lit(0)).alias("max_old"),
-                F.count(F.lit(1)).alias("n_buckets"),
-            )
-            .collect()[0]
-        )
-        telemetry = {
-            "candidate_mass": int(stat["mass"]),
-            "n_buckets": int(stat["n_buckets"]),
-            "max_new": int(stat["max_new"]),
-            "max_old": int(stat["max_old"]),
-        }
-        if telemetry["candidate_mass"] > max_candidate_pairs:
-            sigs.unpersist()
-            banded_new.unpersist()
-            raise RuntimeError(
-                f"LSH ingest candidate budget exceeded: "
-                f"{telemetry['candidate_mass']} candidate pairs (budget "
-                f"{max_candidate_pairs}) for this shard at banding "
-                f"{bands} bands x {rows} rows, threshold {threshold} "
-                f"(largest shard bucket {telemetry['max_new']}, largest "
-                f"colliding index bucket {telemetry['max_old']}). The "
-                f"shard is boilerplate-heavy for this banding — re-band "
-                f"(fewer/wider bands), pre-clean the shard, or raise "
-                f"the budget."
-            )
-
-    # vs the existing corpus: bucket join against the index, gram-verify.
-    # The index side arrives band-partitioned; only buckets colliding with
-    # the new shard survive the join (shuffle ∝ shard + matches).
-    cand_old = (
-        banded_new.select(F.col("id").alias("id_new"), "band", "bucket")
-        .join(
-            idx_bands.select(F.col("id").alias("id_old"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .select("id_new", "id_old")
-        .distinct()
-    )
-    # LEFT join + loud guard: a band entry whose gram row is missing means
-    # the index's two tables diverged (should be impossible with the
-    # grams-first write order — fail fast instead of silently passing the
-    # duplicate through). distinct() tolerates duplicate gram rows, the
-    # benign residue of a replayed append.
-    pairs_old = (
-        cand_old.join(
-            sigs.select(
-                F.col("id").alias("id_new"),
-                F.col("grams").alias("ga"),
-                F.col("fp").alias("fpa"),
-            ),
-            "id_new",
-        )
-        .join(
-            idx_grams.select(
-                F.col("id").alias("id_old"),
-                F.col("grams").alias("gb"),
-                F.col("fp").alias("fpb"),
-            ),
-            "id_old",
-            "left",
-        )
-        .filter(
-            # assert_true returns NULL when the predicate holds and raises
-            # otherwise; as a FILTER predicate it sits in the data path,
-            # so column pruning can't optimize the check away.
-            F.assert_true(
-                F.col("gb").isNotNull(),
-                F.concat(
-                    F.lit(
-                        "LSH index corrupt: band entry without grams for id "
-                    ),
-                    F.col("id_old").cast("string"),
-                ),
-            ).isNull()
-        )
-        .withColumn(
-            "jac",
-            _verify_jaccard(F.col("ga"), F.col("gb"), F.col("fpa"), F.col("fpb")),
-        )
-        .filter(F.col("jac") >= threshold)
-        .select("id_new", "id_old")
-        .distinct()
-    )
-
-    # within the shard: the batch pipeline on the new docs only
-    la, lb = banded_new.alias("a"), banded_new.alias("b")
-    cand_new = (
-        la.join(lb, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    ga = sigs.select(
-        F.col("id").alias("id_a"),
-        F.col("grams").alias("grams_a"),
-        F.col("fp").alias("fp_a"),
-    )
-    gb = sigs.select(
-        F.col("id").alias("id_b"),
-        F.col("grams").alias("grams_b"),
-        F.col("fp").alias("fp_b"),
-    )
-    pairs_new = (
-        cand_new.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jac",
-            _verify_jaccard(
-                F.col("grams_a"), F.col("grams_b"),
-                F.col("fp_a"), F.col("fp_b"),
-            ),
-        )
-        .filter(F.col("jac") >= threshold)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    # pin the (small) pair sets eagerly so downstream consumers and the
-    # index append don't re-run the joins; release the signature caches
-    pairs_old = pairs_old.localCheckpoint(eager=True)
-    pairs_new = pairs_new.localCheckpoint(eager=True)
-
-    dropped = pairs_old.select(F.col("id_new").alias(id_col)).unionByName(
-        pairs_new.select(F.col("id_b").alias(id_col))
-    )
-    survivors = new_docs.join(dropped, id_col, "left_anti")
-
-    if update_index:
-        surv_ids = survivors.select(F.col(id_col).alias("id"))
-        keep_sigs = sigs.join(surv_ids, "id", "left_semi").persist()
-        _write_index_state(keep_sigs, index_path, bands, rows, "append")
-        keep_sigs.unpersist()
-
-    sigs.unpersist()
-    banded_new.unpersist()
-    return {
-        "pairs_old": pairs_old,
-        "pairs_new": pairs_new,
-        "survivors": survivors,
-        "telemetry": telemetry,
-    }
-
-
-def compact_minhash_index(spark, path: str) -> None:
-    """Deduplicate replay residue in the append-only LSH index (replayed
-    appends can leave identical (id, grams) / (id, band, bucket) rows —
-    harmless for correctness, wasteful for the bucket join) and rewrite
-    each table into fewer files. Generation-pointer swap per table
-    (``operators/index_pointer``, shared with
-    ``similarity.compact_ivf_index``): the next generation is written
-    beside the live one and the pointer file flips atomically, so
-    concurrent READERS (incremental_minhash_dedup / streaming ingest
-    mid-scan, or resolving just before the flip) always see a complete
-    table — the replaced generation stays on disk until the NEXT
-    compaction (test-pinned). Grams first (same crash-ordering contract
-    as the appends: bands ⊆ grams always holds for any id). Concurrent
-    WRITERS are still excluded: an append into the old generation after
-    the flip is dropped from the live view — appends and compaction
-    share one maintenance owner."""
-    from .index_pointer import heal_legacy, resolve_table, swap_table
-
-    for sub in ("grams", "bands"):  # grams first: see _write_index_state
-        heal_legacy(path, sub)
-        live = resolve_table(path, sub)
-        df = spark.read.parquet(live).distinct()
-
-        def write_next(dst: str, _df=df, _sub=sub) -> None:
-            w = _df.write.mode("overwrite")
-            if _sub == "bands":
-                w = w.partitionBy("band")
-            w.parquet(dst)
-
-        swap_table(path, sub, write_next)
-
-
-# ---------------------------------------------------------------------------
 # semantic dedup — cluster-scoped embedding near-dup (the published
 # SemDeDup recipe: k-means the embedding space, then compare pairs only
 # WITHIN each cluster; cross-cluster near-dups are traded away, which is
@@ -1820,8 +1239,8 @@ def semantic_dedup(
        (applyInPandas per cluster: cost Σ|cluster|² instead of n² —
        raise ``n_clusters`` to bound the largest cluster at scale);
     3. survivors = min-id per matched pair chain (direct-match
-       semantics, as dedup_increment: a doc is dropped iff a smaller-id
-       near-duplicate shares its cluster).
+       semantics: a doc is dropped iff a smaller-id near-duplicate
+       shares its cluster).
 
     Returns ``pairs`` (id_a < id_b) and ``survivors``. Cross-cluster
     near-duplicates are NOT found — the deliberate recall trade the

@@ -73,26 +73,15 @@ def _gram_rows_sql(id_col: str, text_col: str, rel: str) -> str:
     )
 
 
-def _gram_rows(docs: DataFrame, id_col: str, text_col: str):
-    """Explode each doc into one row per unigram+bigram OCCURRENCE
-    (counts matter — no distinct): lowercased whitespace tokens, empty
-    tokens filtered (split('') yields [''] — the phantom-word trap).
-    Docs with no tokens produce no rows, and are absent from scores —
-    same contract as ``lm.score_perplexity`` for sub-trigram docs."""
-    return docs.sparkSession.sql(
-        _gram_rows_sql(id_col, text_col, "{docs}"), docs=docs
-    )
-
-
-def _featurize(grams, num_buckets: int | None, portable: bool = False):
-    """Feature key per gram row: by default an 8-byte ``xxhash64`` of
-    the gram (the ``contamination`` recipe — count aggregations and the
-    scoring join shuffle longs, never gram strings; a count merge
-    needs an xxhash64 collision between two distinct vocab grams,
-    negligible below ~10¹⁸ grams and exactly the blur ``num_buckets``
-    embraces anyway). ``num_buckets`` additionally folds the hash into
-    B buckets — the 100 TB path where the ratio table is exactly B
-    rows and broadcasts.
+def _feat_sql(num_buckets: int | None, portable: bool) -> str:
+    """Feature key per gram row, as a SQL expression over ``gram``: by
+    default an 8-byte ``xxhash64`` of the gram (the ``contamination``
+    recipe — count aggregations and the scoring join shuffle longs,
+    never gram strings; a count merge needs an xxhash64 collision
+    between two distinct vocab grams, negligible below ~10¹⁸ grams and
+    exactly the blur ``num_buckets`` embraces anyway). ``num_buckets``
+    additionally folds the hash into B buckets — the 100 TB path where
+    the ratio table is exactly B rows and broadcasts.
 
     ``portable=True`` swaps the hash for the top 60 bits of md5 —
     bit-identical in DuckDB as ``CAST('0x' || substr(md5(g),1,15) AS
@@ -100,17 +89,6 @@ def _featurize(grams, num_buckets: int | None, portable: bool = False):
     table → broadcast scoring join, the exact plan the default hash
     runs) is oracle-replayable end to end. Same code path, slower
     hash: use it for adjudication, xxhash64 for production."""
-    if portable:
-        h = F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64("gram")
-    if num_buckets is not None:
-        h = F.pmod(h, F.lit(num_buckets))
-    return grams.select("id", h.alias("feat"))
-
-
-def _feat_sql(num_buckets: int | None, portable: bool) -> str:
-    """:func:`_featurize`'s hash as a SQL expression over ``gram``."""
     if portable:
         h = "CAST(conv(substring(md5(gram), 1, 15), 16, 10) AS BIGINT)"
     else:
@@ -131,9 +109,8 @@ def fit_dsir(
     """Fit the importance-ratio model: per-feature Laplace-smoothed
     log p_target − log p_raw. Returns lazy DataFrames (never collected):
 
-    - ``counts``: (feat, ct, cr) — the MERGEABLE statistic the model
-      derives from; persist this per shard to use :func:`update_dsir`
-      without rescanning old corpora;
+    - ``counts``: (feat, ct, cr) — the per-feature counts the model
+      derives from;
     - ``ratios``: (feat, r) for every feature seen in either corpus,
       r = round(ln((ct+1)/(Tt+V)) − ln((cr+1)/(Tr+V)), 8) as
       decimal(20,8) — quantized per-feature, the exact-sum recipe
@@ -172,9 +149,8 @@ def _tagged_counts(
 def _derive_model(
     counts, num_buckets: int | None, portable: bool = False
 ) -> dict:
-    """Derive ratios/fallback from a mergeable (feat, ct, cr) counts
-    frame — the arithmetic half of :func:`fit_dsir`, shared with
-    :func:`update_dsir`."""
+    """Derive ratios/fallback from a (feat, ct, cr) counts frame — the
+    arithmetic half of :func:`fit_dsir`."""
     spark = counts.sparkSession
     totals_sql = (
         "SELECT coalesce(sum(ct), 0) AS tt, coalesce(sum(cr), 0) AS tr, "
@@ -204,42 +180,6 @@ def _derive_model(
         "num_buckets": num_buckets,
         "portable_hash": portable,
     }
-
-
-def update_dsir(
-    model: dict,
-    new_raw_docs: DataFrame | None = None,
-    new_target_docs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> dict:
-    """Incremental fit: fold new raw and/or target shards into an
-    existing model WITHOUT rescanning the old corpora — feature counts
-    are additive and every derived quantity (totals, vocab size,
-    smoothed ratios, fallback) recomputes from the merged counts, so
-    ``update == refit-on-concatenation`` EXACTLY (law-tested in
-    ``tests/test_dsir.py``). The same mergeable-statistic shape as
-    ``lm.update_char_lm`` and the sketch family; at 100 TB the counts
-    table persists per shard and re-sums lazily."""
-    base = new_raw_docs if new_raw_docs is not None else new_target_docs
-    if base is None:
-        return model
-    fresh = _tagged_counts(
-        new_raw_docs if new_raw_docs is not None else base.limit(0),
-        new_target_docs if new_target_docs is not None else base.limit(0),
-        text_col,
-        id_col,
-        model["num_buckets"],
-        model.get("portable_hash", False),
-    )
-    merged = (
-        model["counts"].unionByName(fresh)
-        .groupBy("feat")
-        .agg(F.sum("ct").alias("ct"), F.sum("cr").alias("cr"))
-    )
-    return _derive_model(
-        merged, model["num_buckets"], model.get("portable_hash", False)
-    )
 
 
 def dsir_log_weights(
@@ -372,70 +312,3 @@ def dsir_select_per_group(
         .where(F.col("__rn") <= k)
         .select(id_col, group_col, "logw_q4")
     )
-
-
-def save_dsir_model(model: dict, path: str) -> None:
-    """Persist a fitted model: the mergeable ``counts`` table (the
-    statistic :func:`update_dsir` folds new shards into), the derived
-    ``ratios``/``fallback`` tables (what scoring joins — persisted so
-    serving never recomputes the derivation), and a ``meta.json``
-    carrying ``num_buckets``. Layout: ``<path>/{counts,ratios,
-    fallback}/*.parquet`` + ``<path>/meta.json``.
-
-    Executes the fit exactly ONCE: only ``counts`` is computed from
-    the model's plan; ratios/fallback are re-derived from the
-    PERSISTED counts parquet (vocab-sized input), which also
-    guarantees the persisted ratios agree with the persisted counts.
-
-    Everything stages under ``<path>.next`` and publishes by swap, so
-    saving a loaded-then-updated model back to ITS OWN path works —
-    writing in place would overwrite the counts parquet the merged
-    plan is still reading (Spark refuses, or worse). A crash between
-    the swap's remove and rename leaves the complete ``.next`` beside
-    a missing ``path``; :func:`load_dsir_model` self-heals that
-    residue (the index-compaction recovery pattern)."""
-    import json
-    import os
-    import shutil
-
-    staging = path + ".next"
-    shutil.rmtree(staging, ignore_errors=True)
-    model["counts"].write.mode("overwrite").parquet(
-        os.path.join(staging, "counts")
-    )
-    spark = model["counts"].sparkSession
-    persisted = spark.read.parquet(os.path.join(staging, "counts"))
-    derived = _derive_model(persisted, model["num_buckets"])
-    derived["ratios"].write.mode("overwrite").parquet(
-        os.path.join(staging, "ratios")
-    )
-    derived["fallback"].write.mode("overwrite").parquet(
-        os.path.join(staging, "fallback")
-    )
-    with open(os.path.join(staging, "meta.json"), "w") as fh:
-        json.dump({"num_buckets": model["num_buckets"]}, fh)
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(staging, path)
-
-
-def load_dsir_model(spark, path: str) -> dict:
-    """Load a model persisted by :func:`save_dsir_model` — all frames
-    lazy parquet reads; scoring against a loaded model never replays
-    the fit. Self-heals a crashed save's residue: a complete
-    ``<path>.next`` next to a missing ``<path>`` is the published
-    model (the crash fell between remove and rename)."""
-    import json
-    import os
-
-    if not os.path.exists(path) and os.path.exists(
-        os.path.join(path + ".next", "meta.json")
-    ):
-        os.rename(path + ".next", path)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    return {
-        "counts": spark.read.parquet(os.path.join(path, "counts")),
-        "ratios": spark.read.parquet(os.path.join(path, "ratios")),
-        "fallback": spark.read.parquet(os.path.join(path, "fallback")),
-        "num_buckets": meta["num_buckets"],
-    }

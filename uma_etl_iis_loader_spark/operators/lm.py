@@ -102,32 +102,6 @@ def train_char_lm(
     }
 
 
-def update_char_lm(lm: dict, new_docs: DataFrame, **kwargs) -> dict:
-    """Incremental training: fold a new document shard into an existing
-    LM without rescanning the old corpus — n-gram counts are additive
-    and the char vocabulary is a distinct-union, so
-    ``update == retrain-on-concatenation`` EXACTLY (law-tested in
-    ``tests/test_lm.py``). The same mergeable-statistic shape as the
-    sketch family; at 100 TB the counts tables persist per shard and
-    re-sum lazily."""
-    fresh = train_char_lm(new_docs, max_chars=lm["max_chars"], **kwargs)
-    tri = (
-        lm["tri"].unionByName(fresh["tri"])
-        .groupBy("gram").agg(F.sum("c_tri").alias("c_tri"))
-    )
-    ctx = tri.groupBy(F.substring("gram", 1, 2).alias("ctx")).agg(
-        F.sum("c_tri").alias("c_ctx")
-    )
-    chars = lm["chars"].unionByName(fresh["chars"]).distinct()
-    return {
-        "tri": tri,
-        "ctx": ctx,
-        "chars": chars,
-        "vocab": chars.agg(F.count(F.lit(1)).alias("v")),
-        "max_chars": lm["max_chars"],
-    }
-
-
 def score_perplexity(
     docs: DataFrame,
     lm: dict,

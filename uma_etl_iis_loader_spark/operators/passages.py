@@ -61,28 +61,6 @@ def shingle_positions(
     ).select("id", "pos", key.alias("key"))
 
 
-def _marked_to_outputs(marked, k: int):
-    """Shared reduction behind both the batch and incremental faces —
-    one implementation, so a change to span semantics can't silently
-    diverge the two (their parity is this module's headline law)."""
-    stats = marked.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum(F.col("rep").cast("long")).alias("n_repeated"),
-    )
-    w = Window.partitionBy("id").orderBy("pos")
-    spans = (
-        marked.filter(F.col("rep"))
-        .withColumn("grp", F.col("pos") - F.row_number().over(w))
-        .groupBy("id", "grp")
-        .agg(
-            F.min("pos").alias("start_word"),
-            (F.max("pos") + F.lit(k - 1)).alias("end_word"),
-        )
-        .select("id", "start_word", "end_word")
-    )
-    return {"stats": stats, "spans": spans}
-
-
 def repeated_passages(
     docs: DataFrame,
     k: int = 8,
@@ -135,145 +113,19 @@ def repeated_passages(
         # lineage to a leaf for both downstream consumers.
         marked = marked.localCheckpoint(eager=True)
         sh.unpersist()
-    return _marked_to_outputs(marked, k)
-
-
-# ---------------------------------------------------------------------------
-# incremental face: persisted shingle index for a growing corpus — the
-# daily-ingest shape (mirrors operators/dedup.build_minhash_index /
-# dedup_increment: the corpus is only ever touched through its compact
-# index, never re-tokenized).
-# ---------------------------------------------------------------------------
-
-
-def build_shingle_index(
-    docs: DataFrame,
-    path: str,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Persist the corpus's shingle state as ``<path>/keys``:
-    (key: xxhash64 long, nd: distinct-doc count). O(distinct shingles)
-    8-byte keys + a count — the compact summary that lets future shards
-    compute cross-corpus repeated passages without re-reading the corpus.
-    Appends by ``passages_increment`` add (key, nd) rows; readers SUM nd
-    per key, so the index is append-only (compact periodically with an
-    overwrite rewrite if the append count grows large)."""
-    from .index_pointer import resolve_table, writer_guard
-
-    writer_guard(path, "keys")
-    sh = shingle_positions(docs, k, id_col, text_col, hashed=True)
-    (
-        sh.groupBy("key")
-        .agg(F.count_distinct("id").alias("nd"))
-        .write.mode("overwrite")
-        .parquet(resolve_table(path, "keys"))
+    stats = marked.groupBy("id").agg(
+        F.count(F.lit(1)).alias("n_shingles"),
+        F.sum(F.col("rep").cast("long")).alias("n_repeated"),
     )
-
-
-def passages_increment(
-    new_docs: DataFrame,
-    index_path: str,
-    k: int = 8,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    update_index: bool = True,
-    pin: bool = True,
-) -> dict[str, DataFrame]:
-    """Repeated-passage detection for a NEWLY LANDED shard against the
-    persisted corpus index + the shard itself.
-
-    A shard window is repeated iff the combined distinct-document count
-    (corpus nd from the index + distinct shard docs) reaches
-    ``min_docs`` — EXACTLY the batch ``repeated_passages`` semantics
-    over (corpus ∪ shard) restricted to shard documents, because the
-    corpus and shard document sets are disjoint (parity pytest-pinned).
-
-    Scale: the shard is tokenized once; the index join ships 8-byte
-    keys; corpus text is never touched. ``update_index=True`` appends
-    the shard's (key, nd) rows AFTER computing the outputs (the marked
-    table is pinned first, so the lazy plans can't observe the shard's
-    own append — same discipline as dedup_increment).
-
-    Replay semantics: re-appending the same shard inflates nd counts,
-    which can only flip windows TOWARD "repeated" (conservative: more
-    flagged, never lost passages). For exactly-once ingestion wrap the
-    call in a committed-batch marker like streaming/cdc's
-    DedupIngestMaintainer does for the LSH index."""
-    if update_index and not pin:
-        raise ValueError(
-            "update_index=True requires pin=True: unpinned (lazy) outputs "
-            "re-read the index after the append and would see the shard's "
-            "own keys, marking every window repeated"
+    w = Window.partitionBy("id").orderBy("pos")
+    spans = (
+        marked.filter(F.col("rep"))
+        .withColumn("grp", F.col("pos") - F.row_number().over(w))
+        .groupBy("id", "grp")
+        .agg(
+            F.min("pos").alias("start_word"),
+            (F.max("pos") + F.lit(k - 1)).alias("end_word"),
         )
-    spark = new_docs.sparkSession
-    sh = shingle_positions(new_docs, k, id_col, text_col, hashed=True)
-    if pin:
-        # shard tokenized ONCE: the shingle table feeds the nd_new
-        # aggregation, the mark join, and (via nd_new) the index append
-        sh = sh.persist()
-    nd_new = sh.groupBy("key").agg(F.count_distinct("id").alias("nd_new"))
-    from .index_pointer import resolve_table
-
-    idx = (
-        spark.read.parquet(resolve_table(index_path, "keys"))
-        .groupBy("key")
-        .agg(F.sum("nd").alias("nd_old"))
+        .select("id", "start_word", "end_word")
     )
-    rep = (
-        nd_new.join(idx, "key", "left")
-        .filter(
-            F.col("nd_new") + F.coalesce(F.col("nd_old"), F.lit(0))
-            >= min_docs
-        )
-        .select("key")
-        .withColumn("__r", F.lit(True))
-    )
-    marked = sh.join(rep, "key", "left").select(
-        "id", "pos", F.coalesce(F.col("__r"), F.lit(False)).alias("rep")
-    )
-    if pin:
-        marked = marked.localCheckpoint(eager=True)
-    if update_index:
-        from .index_pointer import writer_guard
-
-        writer_guard(index_path, "keys")
-        nd_new.withColumnRenamed("nd_new", "nd").write.mode(
-            "append"
-        ).parquet(resolve_table(index_path, "keys"))
-    nd_out = nd_new.withColumnRenamed("nd_new", "nd")
-    if pin:
-        nd_out = nd_out.localCheckpoint(eager=True)
-        sh.unpersist()
-    out = _marked_to_outputs(marked, k)
-    # the shard's own (key, nd) rows — computed from the SAME persisted
-    # shingle table, so callers that manage the index append themselves
-    # (streaming/cdc.PassagesIngestMaintainer's idempotent single-file
-    # append) don't re-tokenize the shard
-    out["nd"] = nd_out
-    return out
-
-
-def compact_shingle_index(spark, path: str) -> None:
-    """Rewrite the append-only (key, nd) log into one summed row per key
-    — same answers, fewer files/rows. Generation-pointer swap
-    (``operators/index_pointer``, shared with the LSH/IVF compactors):
-    concurrent READERS always see a complete table (the replaced
-    generation survives until the next compaction); the pointer flip is
-    the atomic commit point. WRITERS (the update_index append) remain
-    single-owner with compaction."""
-    from .index_pointer import heal_legacy, resolve_table, swap_table
-
-    heal_legacy(path, "keys")
-    live = resolve_table(path, "keys")
-    compacted = (
-        spark.read.parquet(live)
-        .groupBy("key")
-        .agg(F.sum("nd").alias("nd"))
-    )
-    swap_table(
-        path, "keys",
-        lambda dst: compacted.write.mode("overwrite").parquet(dst),
-    )
+    return {"stats": stats, "spans": spans}

@@ -5,18 +5,13 @@ The rung ladder, trading exactness for scan cost and memory:
 - ``brute_force_topk`` — exact cosine top-k: broadcast the query set,
   score in a mapInPandas matrix kernel, window-rank per query. The
   correctness baseline; linear corpus scan per query batch.
-- ``ivf_topk`` / ``build_ivf_index`` + ``ivf_index_topk`` /
-  ``append_ivf_index`` — IVF bucketing with deterministic centroids;
-  the persisted index partition-prunes every query to its nprobe cells
-  and appends new vectors without re-clustering.
+- ``ivf_topk`` — IVF bucketing with deterministic centroids; every
+  query scans only its nprobe cells.
 - ``srp_lsh_topk`` — signed-random-projection LSH: data-independent and
   append-stable (no training state at all).
 - ``train_pq_codebooks`` / ``pq_encode`` / ``pq_topk`` — product
   quantization: 32x-compressed 8-byte codes scored via ADC lookup
   tables, with an exact-refine shortlist stage.
-- ``build_ivfpq_index`` / ``ivfpq_topk`` — the combined billion-scale
-  layout: centroid-partitioned residual-encoded PQ codes; pruned scans
-  over codes, float vectors touched only to rescore the shortlist.
 
 Output is (query id, neighbor id, rank) — ids and integer ranks only, so
 float noise between engines cannot flip a compared value.
@@ -29,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_arrow
-from .index_pointer import resolve_table
 
 
 def _exact_local_topk(sims, ids, top):
@@ -81,7 +75,7 @@ def brute_force_topk(
         raise ValueError(
             f"brute_force_topk collects the query set to the driver; got "
             f"> {max_queries} queries. Use brute_force_topk_distributed "
-            f"(tiled exact), or ivf_topk / srp_lsh_topk / ivfpq_topk for "
+            f"(tiled exact), or ivf_topk / srp_lsh_topk for "
             f"query-heavy approximate workloads, or raise max_queries "
             f"explicitly."
         )
@@ -150,7 +144,7 @@ def brute_force_topk_distributed(
     arranged — this operator makes the arrangement linear-shuffle and
     embarrassingly parallel (tiles = corpus_blocks × query_blocks
     independent tasks), it cannot make the arithmetic cheaper; that is
-    what the IVF+PQ distributed path is for. Size the block counts so
+    what the approximate rungs are for. Size the block counts so
     one tile (corpus/corpus_blocks + |Q|/query_blocks vectors) fits an
     executor."""
     import numpy as np
@@ -275,7 +269,7 @@ def _ivf_centroids(
     id (the SAME rule as the distributed assignment kernel's stable
     argsort), an emptied cluster keeps its previous centroid, and
     centroids re-normalize to the sphere each round (assignment is by
-    max cosine). Reruns, the persisted index, and oracles all agree.
+    max cosine). Reruns and oracles agree.
 
     Driver-memory bound: the sample cap (16,384 rows) keeps the collect
     at ~100 MB of float64 even for 768-dim embeddings (Row overhead
@@ -330,12 +324,7 @@ def ivf_topk(
     """Approximate top-k: IVF bucketing with deterministic Lloyd-refined
     centroids (hash-ordered sample init + seeded spherical k-means on
     the driver — see :func:`_ivf_centroids`; no randomness anywhere, so
-    reruns, persisted indexes, and oracles agree).
-
-    At scale the corpus assignment is written once, partitioned by
-    ``centroid_id``; queries then prune all but nprobe partitions
-    (partition pruning on the parquet scan).
-    """
+    reruns and oracles agree)."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
     cent_mat = _ivf_centroids(c, nlist)
     assigned = _assign_centroid(c, cent_mat, "neighbor_id", "cvec", 1)
@@ -452,354 +441,6 @@ def srp_lsh_topk(
     )
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF index: corpus vectors written PARTITIONED BY their
-    nearest centroid_id, plus the centroid matrix. This is the 100 TB ANN
-    serving shape `ivf_topk`'s docstring promises: assignment cost is paid
-    once at ingest, and every query afterwards reads only its nprobe
-    partitions (real parquet partition pruning, verified in
-    tests/test_similarity.py against the executed plan)."""
-    spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
-    cent_mat = _ivf_centroids(c, nlist)
-    assigned = _assign_centroid(c, cent_mat, "neighbor_id", "cvec", 1)
-    from .index_pointer import append_commit_check, writer_guard
-
-    writer_guard(path, "vectors")
-    vec_dir = resolve_table(path, "vectors")
-    # repartition on the partition column BEFORE partitionBy: without it
-    # every write task emits one file per cell it touches (tasks × nlist
-    # small files — measured 5k files for 160 cells at sf1, ~50k at sf10,
-    # and the file-open tax dominates the query pass); with it each cell
-    # is ONE file and build+query costs drop (sf10, measured: build
-    # 243 s -> 115 s, fixed-800-query batch 41.7 s -> 14.9 s)
-    assigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(vec_dir)
-    append_commit_check(path, "vectors", vec_dir)
-    cent_rows = [
-        (i, [float(x) for x in cent_mat[i]]) for i in range(cent_mat.shape[0])
-    ]
-    spark.createDataFrame(
-        cent_rows, "centroid_id int, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-
-
-def ivf_index_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Query the persisted IVF index: probe nprobe centroids per query,
-    then scan ONLY the probed centroid partitions (`centroid_id IN (...)`
-    reaches the scan as a PartitionFilter — untouched cells are never
-    read, the pruning that makes IVF pay at 100 TB)."""
-    import numpy as np
-
-    cents = sorted(
-        spark.read.parquet(path + "/centroids").collect(),
-        key=lambda r: r.centroid_id,
-    )
-    cent_mat = np.stack([np.asarray(r.cvec, dtype=np.float64) for r in cents])
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    # pin the probed assignment: it feeds both the probe-id collect and
-    # the scored join — without the pin the mapInPandas assignment job
-    # would execute twice per query batch
-    probed = _assign_centroid(q, cent_mat, "query_id", "qvec", nprobe).localCheckpoint(
-        eager=True
-    )
-    # the probed cell set is ≤ nlist — driver-sized by construction
-    probe_ids = [
-        r.centroid_id for r in probed.select("centroid_id").distinct().collect()
-    ]
-    vectors = spark.read.parquet(resolve_table(path, "vectors")).filter(
-        F.col("centroid_id").isin(probe_ids)
-    )
-    scored = probed.join(vectors, "centroid_id").withColumn(
-        "sim", cosine_arrow(F.col("qvec"), F.col("cvec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def append_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental ANN ingest: assign NEW vectors to the persisted
-    index's EXISTING centroids and append them into the matching
-    centroid partitions — queries immediately see them through the same
-    partition-pruned reads, and the corpus is never re-clustered.
-
-    The centroids stay fixed (the standard IVF serving trade-off:
-    assignment quality for appended vectors degrades only if the data
-    distribution drifts from the build-time sample — re-run
-    build_ivf_index to re-center when drift accumulates; recall-parity
-    of appended vs rebuilt vectors on the stationary fixture is
-    pytest-pinned)."""
-    from .index_pointer import append_commit_check, writer_guard
-
-    writer_guard(path, "vectors")
-    vec_dir = resolve_table(path, "vectors")
-    # repartition: one file per touched cell per append, not per task
-    # (see build_ivf_index; compaction merges the per-append files)
-    ivf_append_frame(new_vectors, path, id_col, vec_col).repartition(
-        "centroid_id"
-    ).write.mode("append").partitionBy("centroid_id").parquet(vec_dir)
-    append_commit_check(path, "vectors", vec_dir)
-
-
-def ivf_append_frame(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The (neighbor_id, cvec, centroid_id) frame an IVF append writes —
-    exposed so callers that need a different write protocol (the
-    streaming ingest maintainer's idempotent stage-then-publish) share
-    the exact assignment semantics with :func:`append_ivf_index`."""
-    import numpy as np
-
-    from pyspark.errors import AnalysisException
-
-    spark = new_vectors.sparkSession
-    # layout guard by TRYING the read (works on any storage URI, unlike
-    # an os.path check): a readable codebooks sidecar means IVF+PQ
-    try:
-        spark.read.parquet(path + "/codebooks")
-        raise ValueError(
-            "this is an IVF+PQ index (codebooks sidecar present); use "
-            "append_ivfpq_index — a plain append would write rows "
-            "without codes and corrupt the ADC scan"
-        )
-    except AnalysisException:
-        pass  # no codebooks sidecar: plain IVF layout
-    cents = sorted(
-        spark.read.parquet(path + "/centroids").collect(),
-        key=lambda r: r.centroid_id,
-    )
-    cent_mat = np.stack([np.asarray(r.cvec, dtype=np.float64) for r in cents])
-    c = new_vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    return _assign_centroid(c, cent_mat, "neighbor_id", "cvec", 1)
-
-
-def append_ivfpq_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental ingest for the IVF+PQ layout: NEW vectors are
-    assigned to the persisted index's existing centroids AND
-    residual-encoded with its existing codebooks (and OPQ rotation) in
-    one kernel, then appended into the matching centroid partitions —
-    the IVF+PQ counterpart of :func:`append_ivf_index` (which writes no
-    ``codes`` column and therefore must not be pointed at an IVF+PQ
-    index). Same serving trade as plain-IVF append: quantizer state is
-    frozen, so re-run :func:`build_ivfpq_index` when distribution drift
-    accumulates; append==rebuild recall parity on a stationary fixture
-    is pytest-pinned."""
-    from .index_pointer import append_commit_check, writer_guard
-
-    writer_guard(path, "vectors")
-    vec_dir = resolve_table(path, "vectors")
-    # repartition: one file per touched cell per append, not per task
-    # (see build_ivf_index; compaction merges the per-append files)
-    ivfpq_append_frame(new_vectors, path, id_col, vec_col).repartition(
-        "centroid_id"
-    ).write.mode("append").partitionBy("centroid_id").parquet(vec_dir)
-    append_commit_check(path, "vectors", vec_dir)
-
-
-def ivfpq_append_frame(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The (neighbor_id, cvec, centroid_id, codes) frame an IVF+PQ
-    append writes — shared by :func:`append_ivfpq_index` and the
-    streaming ingest maintainer (same one-kernel assign+encode against
-    the frozen quantizer state)."""
-    import numpy as np
-
-    spark = new_vectors.sparkSession
-    cent_mat, books, rot = _load_ivfpq_sidecars(spark, path)
-    m, ksub, dsub = books.shape
-
-    def assign_encode(batches):
-        import pandas as pd  # noqa: F401 — pdf batches already pandas
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
-            norms = np.linalg.norm(vm, axis=1)
-            vm = vm / np.where(norms == 0, 1.0, norms)[:, None]
-            cent = (vm @ cent_mat.T).argmax(axis=1).astype(np.int32)
-            res = vm - cent_mat[cent]
-            if rot is not None:
-                res = res @ rot.T
-            codes = _pq_assign_codes(res, books)
-            out = pdf.copy()
-            out["centroid_id"] = cent
-            out["codes"] = [cc.tobytes() for cc in codes]
-            yield out
-
-    return new_vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    ).mapInPandas(
-        assign_encode,
-        "neighbor_id long, cvec array<float>, centroid_id int, "
-        "codes binary",
-    )
-
-
-def ivf_cell_stats(spark, path: str) -> DataFrame:
-    """Per-cell occupancy of a persisted IVF / IVF+PQ index:
-    (centroid_id, n_vectors). Computed LIVE from the vectors table so
-    appends are always reflected; the scan touches only the partition
-    column (a directory-derived value — no parquet data pages are read)
-    plus row-count metadata, so this is cheap even on a huge index.
-
-    Cell skew is THE operational risk of IVF at scale (SCALE.md): a hot
-    cell makes every query probing it scan disproportionately, and in
-    the co-grouped distributed query path it bounds one task's working
-    set. Monitor ``ivf_cell_balance`` after builds and periodically
-    under append drift; re-run the build to re-center when the ratio
-    degrades."""
-    return (
-        spark.read.parquet(resolve_table(path, "vectors"))
-        .groupBy("centroid_id")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
-
-
-def ivf_cell_balance(spark, path: str, nlist: int | None = None) -> dict:
-    """Skew telemetry over :func:`ivf_cell_stats` (≤ nlist rows — a
-    bounded driver summary): ``{"n_cells", "min", "max", "mean",
-    "max_over_mean", "empty_cells"}``. ``max_over_mean`` is the
-    headline: 1.0 = perfectly balanced; tests pin a ceiling on the
-    sf0.1 embedding fixture so a centroid-quality regression that
-    collapses vectors into few cells fails loudly."""
-    rows = ivf_cell_stats(spark, path).collect()
-    counts = [r.n_vectors for r in rows]
-    n_cells = len(counts)
-    total = sum(counts)
-    mean = total / n_cells if n_cells else 0.0
-    return {
-        "n_cells": n_cells,
-        "min": min(counts) if counts else 0,
-        "max": max(counts) if counts else 0,
-        "mean": mean,
-        "max_over_mean": (max(counts) / mean) if mean else 0.0,
-        "empty_cells": (nlist - n_cells) if nlist is not None else 0,
-    }
-
-
-def compact_ivf_index(
-    spark, path: str, target_file_bytes: int = 128 << 20
-) -> None:
-    """Rewrite the IVF (or IVF+PQ) index's ``vectors`` table into
-    size-targeted files per centroid partition. ``append_ivf_index``
-    adds one file set per batch; after many small appends the
-    partition-pruned read pays per-file open/footer costs that erode
-    the pruning win — the same small-file growth the LSH indexes get
-    ``compact_minhash_index`` for.
-
-    File sizing is DETERMINISTIC: total bytes and total rows come from
-    parquet file/footer METADATA (driver-side listing, no data scan),
-    giving an average row size; the write carries
-    ``maxRecordsPerFile = target_file_bytes / avg_row_bytes``, so every
-    writer task splits its output at the same row count regardless of
-    how the shuffle distributed cells (a salt-hash repartition, the
-    obvious alternative, can collide two salt groups into one task and
-    silently emit files k× the target). Rows repartition by
-    ``centroid_id`` — typically one task per cell; hash collisions
-    merely co-locate two cells in one task, whose writer still splits
-    directories AND file sizes correctly. Results and pruning are
-    preserved exactly: rows are unchanged, the ``centroid_id=K``
-    directory layout is unchanged, only file boundaries move.
-    Generation-pointer swap (``operators/index_pointer`` — shared with
-    ``dedup.compact_minhash_index``): the next generation is written
-    BESIDE the live one, the ``vectors.CURRENT`` pointer flips
-    atomically, and the replaced generation stays on disk until the
-    NEXT compaction — so concurrent READERS (``ivf_index_topk`` /
-    ``ivfpq_topk`` mid-scan, or resolving just before the flip) always
-    see a complete table (test-pinned). Crash-safe: the pointer flip is
-    the single commit point. Concurrent WRITERS are still excluded: an
-    append landing in the old generation after the flip would be
-    dropped from the live view — run appends and compaction from the
-    same maintenance owner.
-
-    Local-filesystem paths (object stores: swap the pointer file for
-    the store's atomic-manifest commit; the Spark work is identical)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .index_pointer import heal_legacy, swap_table
-
-    heal_legacy(path, "vectors")
-    live = resolve_table(path, "vectors")
-    total_bytes = 0
-    total_rows = 0
-    n_cells = 0
-    for entry in os.listdir(live):
-        if not entry.startswith("centroid_id="):
-            continue
-        n_cells += 1
-        sub = os.path.join(live, entry)
-        for f in os.listdir(sub):
-            if not f.endswith(".parquet"):
-                continue
-            fp = os.path.join(sub, f)
-            total_bytes += os.path.getsize(fp)
-            total_rows += pq.ParquetFile(fp).metadata.num_rows
-    if total_rows == 0:
-        return
-    avg_row_bytes = max(total_bytes / total_rows, 1.0)
-    rows_per_file = max(int(target_file_bytes / avg_row_bytes), 1)
-
-    def write_next(dst: str) -> None:
-        (
-            spark.read.parquet(live)
-            .repartition(n_cells, "centroid_id")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", rows_per_file)
-            .partitionBy("centroid_id")
-            .parquet(dst)
-        )
-
-    swap_table(path, "vectors", write_next)
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ): the memory-compression rung for vector serving.
 # A d-dim float32 vector (256 bytes at d=64) compresses to m uint8 codes
@@ -810,15 +451,6 @@ def compact_ivf_index(
 # recall. (Public method: Jegou, Douze, Schmid, "Product Quantization for
 # Nearest Neighbor Search", IEEE TPAMI 2011.)
 # ---------------------------------------------------------------------------
-
-
-def _guarded_vectors_dir(path: str) -> str:
-    """resolve_table + writer_guard for rebuild writes into the live
-    vectors generation (rebuilds race compaction exactly like appends)."""
-    from .index_pointer import resolve_table, writer_guard
-
-    writer_guard(path, "vectors")
-    return resolve_table(path, "vectors")
 
 
 def train_pq_codebooks(
@@ -833,8 +465,8 @@ def train_pq_codebooks(
     """Deterministic per-subspace k-means codebooks, (m, ksub, d/m).
 
     Training sample = the ``sample_size`` lowest hash-of-id vectors (the
-    same no-randomness device as _ivf_centroids: reruns and persisted
-    encodings agree byte-for-byte). Vectors are L2-normalized first, so
+    same no-randomness device as _ivf_centroids: reruns agree
+    byte-for-byte). Vectors are L2-normalized first, so
     inner-product ADC over codes estimates cosine. Driver-side numpy
     k-means — ksub × m × iters tiny (ksub, dsub) updates; the corpus is
     only sampled, never collected."""
@@ -869,9 +501,7 @@ def _sample_normalized(
     corpus: DataFrame, sample_size: int, id_col: str, vec_col: str
 ):
     """Deterministic L2-normalized training sample (the sample_size
-    lowest hash-of-id vectors) — ONE implementation of the sampling
-    contract, shared by plain-PQ and IVF+PQ training so they can never
-    silently diverge."""
+    lowest hash-of-id vectors), shared by PQ and OPQ training."""
     import numpy as np
 
     rows = (
@@ -888,10 +518,8 @@ def _sample_normalized(
 def _pq_assign_codes(xr, books):
     """Per-subspace nearest-codeword assignment of an (n, d) matrix →
     (n, m) uint8 codes. THE one implementation of the PQ encode rule
-    (||x−c||² = ||x||² − 2⟨x,c⟩ + ||c||², argmin) — the ingest kernels,
-    the append path, and OPQ training all call this, so an encode-rule
-    change can never silently break the pytest-pinned append==rebuild
-    parity."""
+    (||x−c||² = ||x||² − 2⟨x,c⟩ + ||c||², argmin) — the encode kernel
+    and OPQ training both call this."""
     import numpy as np
 
     m, ksub, dsub = books.shape
@@ -930,11 +558,10 @@ def _train_opq_on(vm, m: int, ksub: int, iters: int, opq_iters: int):
     before the split, cutting quantization error vs identity-rotation PQ
     (measured per-query recall-floor lift pinned in the knn_ann query).
     Fully deterministic: identity init, seeded k-means
-    (:func:`_train_books_on`), and SVD of a fixed matrix — reruns,
-    persisted indexes, and oracles agree. Returns ``(R, books)``; encode
+    (:func:`_train_books_on`), and SVD of a fixed matrix — reruns and
+    oracles agree. Returns ``(R, books)``; encode
     ``x @ R.T``, query LUTs from ``R·q`` (rotations preserve inner
-    products, so the exact <q, centroid> IVF term is computed on the
-    UNROTATED vectors and only the residual ADC term rotates)."""
+    products)."""
     import numpy as np
 
     d = vm.shape[1]
@@ -952,9 +579,8 @@ def _train_opq_on(vm, m: int, ksub: int, iters: int, opq_iters: int):
 
 
 def _train_books_on(vm, m: int, ksub: int, iters: int):
-    """Seeded per-subspace k-means over an (n, d) sample matrix —
-    shared by plain-PQ training (on normalized vectors) and IVF+PQ
-    training (on centroid residuals)."""
+    """Seeded per-subspace k-means over an (n, d) sample matrix of
+    normalized vectors."""
     import numpy as np
 
     d = vm.shape[1]
@@ -1049,9 +675,6 @@ def pq_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     max_queries: int = 10_000,
-    cell_col: str | None = None,
-    query_cells: dict | None = None,
-    cell_offsets: dict | None = None,
     rotation=None,
 ) -> DataFrame:
     """Approximate cosine top-k over PQ codes via asymmetric distance
@@ -1067,71 +690,33 @@ def pq_topk(
     rescanned) — the standard two-stage stack that restores recall lost
     to quantization.
 
-    IVF integration (``cell_col`` + ``query_cells``): when codes carry a
-    cell id and the caller supplies {query_id -> set(cell ids)}, each
-    query is scored ONLY against rows of its own probed cells (a per-row
-    boolean mask inside the kernel — cells not probed by a query score
-    -inf), so results are identical whether the query runs alone or in a
-    batch. The query→cells map is driver-sized by the same contract as
-    the query set itself. ``cell_offsets`` ({cell -> {query_id ->
-    float}}) adds a per-(query, cell) scalar to the ADC estimate — the
-    exact <query, centroid> term of residual-encoded IVF+PQ (keyed by
-    query_id, not position, so the caller's ordering never has to match
-    this function's own collect)."""
+    ``rotation``: the OPQ matrix the codes were encoded with — only the
+    query LUTs rotate (rotations preserve inner products)."""
     import numpy as np
     import pandas as pd
 
     books = codebooks
     m, ksub, dsub = books.shape
-    if (cell_col is None) != (query_cells is None):
-        raise ValueError("cell_col and query_cells must be passed together")
-    if cell_offsets is not None and cell_col is None:
-        raise ValueError(
-            "cell_offsets requires cell_col/query_cells (offsets apply "
-            "per row-cell inside the masked kernel)"
-        )
     q_rows = (
         queries.select(query_id_col, vec_col).limit(max_queries + 1).collect()
     )
     if len(q_rows) > max_queries:
         raise ValueError(
             f"pq_topk collects the query set to the driver; got > "
-            f"{max_queries} queries — raise max_queries explicitly, or "
-            f"use ivfpq_topk (distributed='auto') whose co-grouped path "
-            f"runs corpus-sized query sets without a driver collect."
+            f"{max_queries} queries — raise max_queries explicitly."
         )
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     qnorm = np.linalg.norm(qm, axis=1)
     qm = qm / np.where(qnorm == 0, 1.0, qnorm)[:, None]
     # LUT[q, mi, code] = <q_sub(mi), codeword>: ADC sim = sum_mi LUT gather.
-    # OPQ: codes quantize ROTATED vectors/residuals, and rotations
-    # preserve inner products, so only the LUT side rotates — the exact
-    # <q, centroid> cell_offsets stay in the unrotated space.
+    # OPQ: codes quantize ROTATED vectors, and rotations preserve inner
+    # products, so only the LUT side rotates.
     qr = qm if rotation is None else qm @ rotation.T
     luts = np.einsum(
         "qmd,mkd->qmk", qr.reshape(len(qr), m, dsub), books
     )
     shortlist = k * refine_factor if refine_corpus is not None else k
-    if query_cells is not None:
-        # per-cell boolean row over the query axis, shipped in the closure
-        all_cells = sorted({c for cs in query_cells.values() for c in cs})
-        cell_mask = {
-            c: np.array(
-                [c in query_cells.get(int(q), ()) for q in qids], dtype=bool
-            )
-            for c in all_cells
-        }
-    else:
-        cell_mask = None
-    if cell_offsets is not None:
-        # re-key by THIS function's query axis (qids order)
-        cell_off_vec = {
-            c: np.array([d.get(int(qq), 0.0) for qq in qids])
-            for c, d in cell_offsets.items()
-        }
-    else:
-        cell_off_vec = None
 
     def score(batches):
         for pdf in batches:
@@ -1144,20 +729,6 @@ def pq_topk(
             sims = np.zeros((len(ids), len(qids)))
             for mi in range(m):
                 sims += luts[:, mi, codes[:, mi]].T  # (batch, Q)
-            if cell_mask is not None:
-                cells = pdf[cell_col].to_numpy()
-                if cell_off_vec is not None:
-                    zero = np.zeros(len(qids))
-                    sims += np.stack(
-                        [cell_off_vec.get(int(c), zero) for c in cells]
-                    )  # (batch, Q): the exact <q, centroid(cell)> term
-                mask = np.stack(
-                    [
-                        cell_mask.get(int(c), np.zeros(len(qids), dtype=bool))
-                        for c in cells
-                    ]
-                )  # (batch, Q): True where this row's cell was probed
-                sims = np.where(mask, sims, -np.inf)
             top = min(shortlist, len(ids))
             idx = _exact_local_topk(sims, ids, top)
             out = pd.DataFrame(
@@ -1167,12 +738,9 @@ def pq_topk(
                     "sim": np.take_along_axis(sims, idx, axis=0).T.ravel(),
                 }
             )
-            if cell_mask is not None:
-                out = out[np.isfinite(out["sim"])]  # masked rows never rank
             yield out
 
-    in_cols = [id_col, "codes"] + ([cell_col] if cell_col else [])
-    candidates = codes_df.select(*in_cols).mapInPandas(
+    candidates = codes_df.select(id_col, "codes").mapInPandas(
         score, "query_id long, neighbor_id long, sim double"
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1200,396 +768,6 @@ def pq_topk(
         ranked.join(F.broadcast(qdf), "query_id")
         .join(cv, "neighbor_id")
         .withColumn("sim", cosine_arrow(F.col("qvec"), F.col("cvec")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    nlist: int = 16,
-    m: int = 8,
-    ksub: int = 256,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    opq_iters: int = 8,
-) -> None:
-    """IVF + PQ combined index — the standard billion-scale serving
-    layout: vectors are partitioned by nearest IVF centroid (so queries
-    prune partitions) AND stored as PQ codes (so the probed partitions
-    scan 8-byte codes, not 256-byte vectors). On top of the layout the
-    float vectors are kept alongside their codes per partition for the
-    optional exact-refine stage — drop that column in deployments where
-    a separate lookup service rescores.
-
-    Persists: ``<path>/centroids`` (IVF), ``<path>/codebooks`` (PQ, one
-    row per (subspace, codeword)), ``<path>/rotation`` (the learned OPQ
-    matrix; ``opq_iters=0`` → identity ≡ classic IVF+PQ), and
-    ``<path>/vectors`` (centroid_id-partitioned: id, codes, cvec)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    cent_mat = _ivf_centroids(c, nlist)
-    # train the codebooks on CENTROID RESIDUALS (v − its cell centroid):
-    # inside a probed cell PQ has to reconstruct the offset FROM the
-    # centroid, and residuals have far less variance than raw vectors —
-    # the standard IVF+PQ refinement; ADC adds the exact <q, centroid>
-    # term back per (query, cell) at search time
-    vm = _sample_normalized(corpus, 2048, id_col, vec_col)
-    if vm.shape[1] % m != 0:
-        raise ValueError(f"dimension {vm.shape[1]} not divisible by m={m}")
-    sample_cells = (vm @ cent_mat.T).argmax(axis=1)
-    rot, books = _train_opq_on(
-        vm - cent_mat[sample_cells], m, ksub, iters=10, opq_iters=opq_iters
-    )
-    dsub = books.shape[2]
-
-    # ONE kernel assigns the centroid AND encodes the codes — both
-    # cent_mat and books are driver-side closure matrices, so splitting
-    # this into _assign_centroid + pq_encode + join would scan the corpus
-    # twice and shuffle it once for nothing at ingest
-    def assign_encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
-            norms = np.linalg.norm(vm, axis=1)
-            vm = vm / np.where(norms == 0, 1.0, norms)[:, None]
-            cent = (vm @ cent_mat.T).argmax(axis=1).astype(np.int32)
-            res = (vm - cent_mat[cent]) @ rot.T  # PQ encodes R·residual
-            codes = _pq_assign_codes(res, books)
-            out = pdf.copy()
-            out["centroid_id"] = cent
-            out["codes"] = [cc.tobytes() for cc in codes]
-            yield out
-
-    vec_dir = _guarded_vectors_dir(path)
-    c.mapInPandas(
-        assign_encode,
-        "neighbor_id long, cvec array<float>, centroid_id int, codes binary",
-    ).repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(vec_dir)
-    from .index_pointer import append_commit_check
-
-    append_commit_check(path, "vectors", vec_dir)
-    spark.createDataFrame(
-        [
-            (i, [float(x) for x in cent_mat[i]])
-            for i in range(cent_mat.shape[0])
-        ],
-        "centroid_id int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    mm, kk, dsub = books.shape
-    spark.createDataFrame(
-        [
-            (mi, ci, [float(x) for x in books[mi, ci]])
-            for mi in range(mm)
-            for ci in range(kk)
-        ],
-        "m int, code int, sub array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/codebooks")
-    spark.createDataFrame(
-        [(i, [float(x) for x in rot[i]]) for i in range(rot.shape[0])],
-        "row int, vals array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/rotation")
-
-
-def _load_ivfpq_sidecars(spark, path: str):
-    """(cent_mat, books, rotation) from the persisted index — all
-    driver-sized by construction (nlist centroids; m × ksub codewords;
-    one d × d matrix), the same class of driver data as a broadcast dim.
-    Pre-OPQ indexes have no ``rotation`` sidecar → identity (None)."""
-    import numpy as np
-
-    cents = sorted(
-        spark.read.parquet(path + "/centroids").collect(),
-        key=lambda r: r.centroid_id,
-    )
-    cent_mat = np.stack([np.asarray(r.cvec, dtype=np.float64) for r in cents])
-    book_rows = spark.read.parquet(path + "/codebooks").collect()
-    mm = max(r.m for r in book_rows) + 1
-    kk = max(r.code for r in book_rows) + 1
-    dsub = len(book_rows[0].sub)
-    books = np.zeros((mm, kk, dsub))
-    for r in book_rows:
-        books[r.m, r.code] = np.asarray(r.sub, dtype=np.float64)
-    # detect the sidecar by TRYING the read, not os.path (which is
-    # driver-local-FS only and would silently load rot=None for an
-    # OPQ index on s3a://hdfs:// — unrotated LUTs against rotated
-    # codes, wrong scores with no error)
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = sorted(
-            spark.read.parquet(path + "/rotation").collect(),
-            key=lambda r: r.row,
-        )
-        rot = np.stack([np.asarray(r.vals, dtype=np.float64) for r in rows])
-    except AnalysisException:
-        rot = None  # pre-OPQ index: no rotation sidecar → identity
-    return cent_mat, books, rot
-
-
-def ivfpq_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    refine_factor: int = 4,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_queries: int = 10_000,
-    distributed: bool | str = "auto",
-) -> DataFrame:
-    """Query the IVF+PQ index: probe ``nprobe`` centroids per query,
-    partition-prune the vectors scan to the probed cells, ADC-score the
-    codes there, take a k × refine_factor shortlist, and exactly rescore
-    it against the stored float vectors. The scan that dominates at
-    scale reads only probed partitions and only the (id, codes) columns
-    until the final shortlist join.
-
-    Two query-side executions, same results (pytest-pinned equal):
-
-    - **driver path** (|Q| ≤ ``max_queries``): one guarded collect of
-      the query set serves probe assignment, the partition filter, and
-      the per-(query, cell) residual offsets; the ADC kernel ships the
-      query LUTs in its closure. Lowest latency for serving-shaped
-      batches.
-    - **distributed path** (|Q| > ``max_queries``, or
-      ``distributed=True``): the query set NEVER reaches the driver —
-      queries are assigned to probe cells by the same
-      ``_assign_centroid`` kernel the corpus ingest uses, co-grouped
-      with the code partitions per cell (``cogroup().applyInPandas``),
-      and ADC-scored cell-locally; only per-(query, cell) shortlists
-      shuffle. This is the corpus-sized-query-batch path (re-embedding
-      a corpus against itself). ``distributed=False`` restores the
-      hard raise on overflow.
-
-    Per-query cell restriction: the vectors scan is partition-pruned to
-    the UNION of probed cells (one pruned scan for the whole batch), but
-    each query only scores rows of ITS OWN probed cells — so a query's
-    result set is identical whether it runs alone or in a batch, and on
-    either path. Measured corpus recall@10 vs brute force
-    at sf0.1 (nlist=16, m=8, refine_factor=4): 0.50 at nprobe=4, 0.64
-    at nprobe=8 — the cell-miss of IVF dominates; raise nprobe or
-    refine_factor to trade scan cost for recall."""
-    import numpy as np
-
-    cent_mat, books, rot = _load_ivfpq_sidecars(spark, path)
-
-    # ONE guarded collect of the query set serves everything driver-side:
-    # probe cells (argsort of the normalized-IP base matrix — identical
-    # semantics to _assign_centroid, without a distributed job), the
-    # partition filter, and the per-(query, cell) residual offsets. The
-    # frame handed to pq_topk is REBUILT from these collected rows, so a
-    # nondeterministic input DataFrame (sample/limit without order)
-    # cannot desynchronize the three views of the query set.
-    if distributed is True:
-        q_rows = []
-    else:
-        q_rows = (
-            queries.select(query_id_col, vec_col)
-            .limit(max_queries + 1)
-            .collect()
-        )
-    if distributed is True or len(q_rows) > max_queries:
-        if distributed is False:
-            raise ValueError(
-                f"ivfpq_topk collects the query set to the driver; got > "
-                f"{max_queries} queries — raise max_queries explicitly, "
-                f"or leave distributed='auto' for the co-grouped path."
-            )
-        return _ivfpq_topk_distributed(
-            spark,
-            path,
-            queries,
-            cent_mat,
-            books,
-            rot,
-            k=k,
-            nprobe=nprobe,
-            refine_factor=refine_factor,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
-        )
-    qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qn = np.linalg.norm(qm, axis=1)
-    qm = qm / np.where(qn == 0, 1.0, qn)[:, None]
-    base = qm @ cent_mat.T  # (Q, nlist): exact <q, centroid> terms
-    order = np.argsort(-base, axis=1, kind="stable")[:, :nprobe]
-    query_cells = {
-        int(r[0]): {int(c) for c in order[i]} for i, r in enumerate(q_rows)
-    }
-    probe_ids = sorted({c for cs in query_cells.values() for c in cs})
-    cell_offsets = {
-        cid: {int(r[0]): float(base[i, cid]) for i, r in enumerate(q_rows)}
-        for cid in probe_ids
-    }
-    q = spark.createDataFrame(
-        [(int(r[0]), [float(x) for x in r[1]]) for r in q_rows],
-        f"query_id long, {vec_col} array<float>",
-    )
-    vectors = spark.read.parquet(resolve_table(path, "vectors")).filter(
-        F.col("centroid_id").isin(probe_ids)
-    )
-    return pq_topk(
-        vectors.select("neighbor_id", "codes", "centroid_id"),
-        books,
-        q,
-        k=k,
-        refine_corpus=vectors.select(
-            "neighbor_id", F.col("cvec").alias(vec_col)
-        ),
-        refine_factor=refine_factor,
-        id_col="neighbor_id",
-        vec_col=vec_col,
-        query_id_col="query_id",
-        cell_col="centroid_id",
-        query_cells=query_cells,
-        cell_offsets=cell_offsets,
-        rotation=rot,
-    )
-
-
-def _ivfpq_topk_distributed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    cent_mat,
-    books,
-    rotation,
-    k: int,
-    nprobe: int,
-    refine_factor: int,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """IVF+PQ search with a DISTRIBUTED query side — no collect of the
-    query set anywhere, so a corpus-sized query batch (|Q| ≈ |corpus|,
-    the self-join shape of corpus-vs-corpus re-embedding) runs as an
-    ordinary Spark job.
-
-    Execution:
-
-    1. queries → (query_id, qvec, centroid_id) × nprobe via the same
-       ``_assign_centroid`` matrix kernel the ingest uses (narrow map,
-       ships only the nlist × d centroid matrix).
-    2. the probed frame co-groups with the code partitions on
-       ``centroid_id`` (``cogroup().applyInPandas``): per cell, ONE
-       numpy kernel builds the local queries' ADC LUTs, scores the
-       cell's codes, adds the exact <q, centroid(cell)> residual offset,
-       and emits each query's cell-local top ``k × refine_factor``.
-       Shuffle volume is codes-once + queries×nprobe in, and
-       |Q| × nprobe × shortlist candidate rows out — never |Q| × |cell|
-       score pairs.
-    3. a global per-query window trims the union of cell shortlists to
-       the exact top ``k × refine_factor`` (a cell-local top-s is a
-       superset of its members in the global top-s, so this equals the
-       driver path's shortlist exactly), then the standard exact-refine
-       rescores against the stored float vectors.
-
-    Cell size bounds the kernel's working set: a cell holds ~|corpus| /
-    nlist code rows (8-byte codes) and the queries probing it — at
-    billion scale with nlist ~ √n both sides stay executor-sized; cell
-    skew is surfaced by ``ivf_cell_stats``. Results are pinned equal to
-    the driver path in tests/test_similarity.py."""
-    import numpy as np
-    import pandas as pd
-
-    m, ksub, dsub = books.shape
-    shortlist = k * refine_factor
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    probed = _assign_centroid(q, cent_mat, "query_id", "qvec", nprobe)
-
-    # partition-prune the codes scan to the union of probed cells: the
-    # distinct cell-id list is ≤ nlist — driver-bounded regardless of |Q|
-    probed = probed.localCheckpoint(eager=True)
-    probe_ids = [
-        r.centroid_id for r in probed.select("centroid_id").distinct().collect()
-    ]
-    vectors = spark.read.parquet(resolve_table(path, "vectors")).filter(
-        F.col("centroid_id").isin(probe_ids)
-    )
-
-    def cell_kernel(key, codes_pdf, q_pdf) -> pd.DataFrame:
-        if len(codes_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
-        cell = int(key[0])
-        qids = q_pdf["query_id"].to_numpy(dtype=np.int64)
-        qm = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in q_pdf["qvec"]]
-        )
-        qn = np.linalg.norm(qm, axis=1)
-        qm = qm / np.where(qn == 0, 1.0, qn)[:, None]
-        # same ADC math as pq_topk: LUT gather (over the OPQ-rotated
-        # query — codes quantize rotated residuals) + exact <q, centroid>
-        # term in the unrotated space
-        qr = qm if rotation is None else qm @ rotation.T
-        luts = np.einsum("qmd,mkd->qmk", qr.reshape(len(qr), m, dsub), books)
-        offset = qm @ cent_mat[cell]  # (Qcell,)
-        ids = codes_pdf["neighbor_id"].to_numpy(dtype=np.int64)
-        codes = np.stack(
-            [np.frombuffer(c, dtype=np.uint8) for c in codes_pdf["codes"]]
-        )
-        sims = np.zeros((len(ids), len(qids)))
-        for mi in range(m):
-            sims += luts[:, mi, codes[:, mi]].T  # (cell_rows, Qcell)
-        sims += offset[None, :]
-        top = min(shortlist, len(ids))
-        idx = _exact_local_topk(sims, ids, top)
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, top),
-                "neighbor_id": ids[idx].T.ravel(),
-                "sim": np.take_along_axis(sims, idx, axis=0).T.ravel(),
-            }
-        )
-
-    candidates = (
-        vectors.select("neighbor_id", "codes", "centroid_id")
-        .groupBy("centroid_id")
-        .cogroup(probed.select("query_id", "qvec", "centroid_id").groupBy("centroid_id"))
-        .applyInPandas(cell_kernel, "query_id long, neighbor_id long, sim double")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    ranked = (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    # exact refine on the shortlist: true-vector cosine; the query side
-    # joins by key (no broadcast — |Q| is unbounded on this path)
-    rescored = (
-        ranked.join(probed.select("query_id", "qvec").dropDuplicates(["query_id"]), "query_id")
-        .join(
-            vectors.select("neighbor_id", F.col("cvec").alias("nvec")),
-            "neighbor_id",
-        )
-        .withColumn("sim", cosine_arrow(F.col("qvec"), F.col("nvec")))
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()

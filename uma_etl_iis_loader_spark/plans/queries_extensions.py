@@ -2105,7 +2105,7 @@ def q_knn_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # opq_iters=3/iters=6: measured identical FLOORS to the 8x10
     # full-strength config at sf0.1 (min 0.60; avg 0.921 vs 0.939) at
     # ~quarter the training cost — this query retrains per run; the
-    # full-strength default stays for build-once persisted indexes
+    # full-strength default stays for callers that train once and reuse
     rot, books = train_opq_codebooks(
         emb, m=8, ksub=256, opq_iters=3, iters=6
     )
