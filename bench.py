@@ -2,12 +2,13 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Each query is executed with a full action (count over the materialized
-result) after a session warm-up that pre-compiles common codegen shapes,
-warms the Arrow/python workers, and pre-touches fixture files into the
-OS page cache. No QUERY data is cached between queries — numbers reflect
-cold plans over warm infrastructure (the steady state of a long-lived
-cluster, where first-touch disk I/O and JVM JIT are already amortized).
+Each query's number is end to end: its ``fn()`` call (plan construction
+plus any eager jobs inside it) and a full action (count over the
+materialized result), with the setup/action split kept beside it in
+BENCH_DETAIL.json. Queries run after ``warm_up``, which pre-compiles
+common codegen shapes, starts the Arrow/python workers and pre-touches
+fixture files into the OS page cache. No query data is cached between
+queries — numbers reflect cold plans over warm infrastructure.
 """
 
 from __future__ import annotations
@@ -63,13 +64,9 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from uma_etl_iis_loader_spark.plans.registry import QUERIES
-    from uma_etl_iis_loader_spark.session import build_session
-
-    spark = build_session("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def warm_up(spark, sf_dir: str) -> None:
+    """The session warm-up that every timed run starts with (also
+    ``tools/profile_queries.py``)."""
     # JVM warm-up so q1 doesn't pay one-time infra costs: codegen compiler,
     # shuffle machinery, parquet reader, Arrow python workers, and JIT of
     # the hot operator loops (hash agg, broadcast join, explode, sort,
@@ -209,231 +206,66 @@ def main() -> None:
         "SELECT max(s) FROM u"
     ).count()
 
-    # Synthesized-fixture materialization, timed ONCE as setup: a real
-    # deployment reads schedule_events as a table — per-query numbers
-    # should measure the query plan, not re-deriving its input.
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from uma_etl_iis_loader_spark.plans.fixtures import (
         materialize_schedule_fixture,
     )
+    from uma_etl_iis_loader_spark.plans.registry import QUERIES
+    from uma_etl_iis_loader_spark.session import build_session
 
+    spark = build_session("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, sf_dir)
+
+    # Synthesized-fixture materialization, timed ONCE as setup: a real
+    # deployment reads schedule_events as a table — per-query numbers
+    # should measure the query plan, not re-deriving its input.
     t0 = time.time()
     materialize_schedule_fixture(spark, sf_dir)
     fixture_setup_s = round(time.time() - t0, 3)
 
-    # host-interference gate (tools/hostgate.py): fixed-work calibration
-    # spins + the steal counter bracket the measured section, so a
-    # degraded shared-host window is DETECTED per run instead of argued
-    # from history. Compare gate_before/gate_after across same-round
-    # runs: query deltas under matching calibrations are code; deltas
-    # tracking calibration drift are host.
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-    )
-    import hostgate
-
-    hostgate.warm()
-    gate_before = hostgate.measure()
-
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # per query: setup_s = plan construction + driver-side payload
-    # synthesis (the fn() call); query_s = execution (the count action).
+    # per query, end to end: setup = the fn() call (plan construction,
+    # driver-side payload synthesis and any eager jobs it runs), action =
+    # the final count; the query's number is their sum
     times: dict[str, float] = {}
     setups: dict[str, float] = {}
-    total = 0.0
-    setup_total = 0.0
+    actions: dict[str, float] = {}
     for name in HEADLINE:
         fn = QUERIES[name]
         t0 = time.time()
         df = fn(spark, sf_dir)
         t1 = time.time()
         df.count()
-        dt = round(time.time() - t1, 3)
-        times[name] = dt
+        t2 = time.time()
         setups[name] = round(t1 - t0, 3)
-        total += dt
-        setup_total += t1 - t0
-
-    # "value" stays all-inclusive (comparable with earlier rounds, where
-    # fn()+count were timed together); the setup/query split is itemized
-    # alongside. NB queries that pin intermediates eagerly inside fn()
-    # (the LSH/ngram dedups) execute that work during "setup" — the split
-    # separates driver-side/plan-build/pin cost from the final action,
-    # the sum is always the whole query.
-    #
-    # "scale_step_sf1": the recorded 10x (sf0.1 -> sf1) scale-step
-    # measurement from tools/bench_scale.py over the tiled fixture
-    # (tools/gen_scale_fixture.py — regenerable; see SCALE.md for the
-    # table and methodology). Embedded, not re-run, so the per-round
-    # bench stays fast; refresh with
-    #   python tools/gen_scale_fixture.py /root/testdata/sf0.1 testdata_sf1 10
-    #   python tools/bench_scale.py /root/testdata/sf0.1 testdata_sf1 > SCALE_STEP.json
-    scale_step = None
-    step_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "SCALE_STEP.json")
-    if os.path.exists(step_path):
-        try:
-            with open(step_path) as fh:
-                scale_step = json.load(fh)
-        except (OSError, ValueError):
-            scale_step = None
+        actions[name] = round(t2 - t1, 3)
+        times[name] = round(setups[name] + actions[name], 3)
+    setup_total = round(sum(setups.values()), 3)
+    action_total = round(sum(actions.values()), 3)
+    value = round(setup_total + action_total + fixture_setup_s, 3)
 
     # "extras": operators OUTSIDE the 50-slot registry (pytest-pinned, no
     # driver adjudication slot) still get a recorded timing here so the
     # round artifact shows they run at sf0.1, not just on toy test data.
     extras = _run_extras(spark, sf_dir)
 
-    gate_after = hostgate.measure()
-    host_gate = {
-        "before": gate_before,
-        "after": gate_after,
-        "steal_delta_jiffies": gate_after["steal_jiffies"]
-        - gate_before["steal_jiffies"],
-        "cal1_drift": round(
-            max(gate_before["cal1_s"], gate_after["cal1_s"])
-            / max(min(gate_before["cal1_s"], gate_after["cal1_s"]), 1e-3),
-            3,
-        ),
-        "cal32_drift": round(
-            max(gate_before["cal32_s"], gate_after["cal32_s"])
-            / max(min(gate_before["cal32_s"], gate_after["cal32_s"]), 1e-3),
-            3,
-        ),
-    }
-
-    # Full detail goes to a sidecar file (committed to the repo): per-query
-    # setup split, extras timings, and the embedded 10x scale-step. The
-    # driver's artifact capture keeps only the last ~2,000 chars of stdout,
-    # so the FINAL stdout line must be a compact JSON that fits — totals +
-    # the per-query map only. (Rounds 4-5 lost the per-query evidence to
-    # tail truncation when everything was inlined in one giant line.)
-    # Per-query provenance notes the round artifacts should carry.
-    notes = {
-        "_host_speed": "uniform host-speed drift persists (r7: identical "
-        "code measured 60.9 s and 75-76 s in different idle hours; r8: "
-        "41.2-42.2 s query totals; r9: 34.0-34.9 s, i.e. the r8 "
-        "committed sidecar sat in a SLOW hour — untouched-query median "
-        "ratio r9 vs r8 is ~x0.88) — compare per-query ratios within a "
-        "run, not absolute seconds across hours; "
-        "tools/bench_compare.py OLD NEW --changed q1,q2 computes the "
-        "untouched-median window and per-query net ratios mechanically",
-        "_window_r9": "committed sidecar = the last of five same-hour "
-        "r9 runs (query totals 34.0/34.1/34.9/35.6/35.3 s, tight; the "
-        "final run carries the streamed-kernel LSH default); per-query "
-        "deltas vs BENCH_r08 read ~x0.88 from the window alone",
-        "_window_r10": "committed sidecar = cleanest of three same-hour "
-        "r10 runs (query totals 33.8/34.2/32.6 s; untouched-median "
-        "window vs BENCH_r09 x0.83-0.87)",
-        "_window_r12": "optimization round: the builder's session saw "
-        "cal32 4.5-5.3 (vs 2.9 in the r11 committed window, i.e. ~1.33x "
-        "slower on byte-identical code) with recurring load storms "
-        "(steal 9-22%, load spikes to 40+); all r12 before/after "
-        "evidence is same-session interleaved A/B or gate-accepted "
-        "median-of-3 (OPTIMIZATION_r12.md). Gate-accepted medians at "
-        "the end of the round: setup_total 50.9 -> 42.3, per-query "
-        "wins etl_job_sync 11.4->6.9, dedup_lsh_pairs 10.3->7.7, "
-        "grouping_analytics 7.0->5.3, corpus_stats 4.9->3.8, "
-        "dedup_ngram 3.5->2.9, shred 5.8->5.1, bm25 1.7->1.3 on "
-        "otherwise-identical plans",
-        "multimodal_ops_r12": "cells 3-9 s in the r12 baseline window "
-        "ballooned to 17-21 s later the same day AT THE BASELINE COMMIT "
-        "TOO (bisected): sustained 32-worker Python codec CPU is the "
-        "workload most exposed to host throttling that the 6 s cal "
-        "probes cannot see. Code unchanged this round; compare this "
-        "cell only across same-window runs",
-        "_window_r11": "every run now carries a host_gate block "
-        "(tools/hostgate.py: fixed-work cal spins + steal bracketing "
-        "the measured section) — the r10 'window narrative' problem is "
-        "mechanized. Eight same-session r11 runs: totals 36.3/36.6/"
-        "40.0 (pre-warmup-fix) then 34.2/48.0/37.3/34.0/33.3; the 48.0 "
-        "run's own gate shows cal1 +52% / cal32 +56% after (host "
-        "degraded mid-run, REJECTED), the 37.3 run cal1 +31% "
-        "(drifted), the three clean-gated cells 33.3-34.2 = spread "
-        "x1.028. bench_compare vs r9: window x0.900, total x0.89, no "
-        "net flag outside the <0.2 s jitter band — r11 vs r9 reads "
-        "~x1.0 as predicted, so BENCH_r10 (window x0.809 vs r11) is "
-        "retired as the degraded-window outlier artifact",
-        "curation_pipeline": "r9 bench_compare flag (1.40 net, "
-        "untouched code) CLEARED by three same-hour r10 runs: "
-        "0.64/0.71/0.73 s, net x0.73-0.87 vs r9 — the r9 1.01 s cell "
-        "was window noise, no code cause",
-        "stream_sessionize": "r9 bench_compare flag (1.30 net, "
-        "untouched code) CLEARED: 0.70/0.72/0.80 s across three r10 "
-        "runs, net x0.92-1.03 vs r9, inside the jitter band",
-        "dedup_exact": "r10 watch RESOLVED with a named, measured "
-        "cause: the cell was ~70% one-time JVM JIT of the md5/regexp "
-        "fingerprint shapes — fresh-session first run 2.47 s vs "
-        "0.59-0.69 s runs 2-4 on the IDENTICAL plan (r11 isolation); "
-        "in-bench the cell measured whichever JIT fraction the 10 "
-        "preceding queries hadn't absorbed (r6-r9 1.48-1.62, r10-r11 "
-        "1.59-1.91 — C2 scheduling noise, not a data path). r11 adds "
-        "the fingerprint shapes to the warm-up block (the harness's "
-        "stated contract: cold plans over warm infrastructure), so the "
-        "cell now measures the operator: expect ~0.6 s, a one-time "
-        "DISCONTINUITY vs r10 explained here, not a speedup claim",
-        "grouping_analytics": "r8 flag RESOLVED by three same-hour r9 "
-        "runs on identical operator code: 0.82 / 1.06 / 1.23 s — the "
-        "query's OWN run-to-run spread is ±0.4 s (it unions cube + "
-        "grouping-sets + an 8-round pagerank (~25 tiny stages) + a "
-        "bloom join: scheduler/GC-sensitive, stage-count-bound, not "
-        "data-bound). r6's 0.84 and r8's 1.21 are both inside this "
-        "distribution; no code cause, watch closed",
-        "dedup_lsh_pairs": "r9 grouped verify (per-bucket Arrow kernel, "
-        "default): 2.56 -> 2.23-2.42 s here where the in-plan exact-"
-        "Jaccard oracle baseline dominates; the production-path win is "
-        "at scale — sf10 recall-tuned banding 269 s (r8 join verify) "
-        "-> ~24-47 s (grouped), see SCALE_STEP_100X.json. r10: the "
-        "verify shuffle degree is now PINNED from the collision stats "
-        "(one persisted agg serves the budget guard + repartition "
-        "count); 2.31-2.52 s across three r10 runs, net x1.09-1.15 = "
-        "jitter-band, i.e. the extra driver summary costs nothing "
-        "measurable at sf0.1",
-        "sampling_ops": "1.83-2.13 s across r9 runs = flat net of "
-        "window vs r8's 2.27 s (the r8 additions' pricing note stands: "
-        "three hash-adjudicated families rode in at r8; portable md5 "
-        "hash is adjudication-only, production keeps xxhash64)",
-        "llm_prep_ops": "r8 persist experiment stays reverted (lazy "
-        ".persist() on the shared lm-scoring subtree regressed 1.09 -> "
-        "3.46 s: both union branches raced to build the cache and "
-        "materialization defeated ReuseExchange); 0.98-1.2 s at r9",
-        "knn_ann": "setup still includes per-run OPQ training (~2.4 s, "
-        "documented r7) — persisted-index builds pay it once (now "
-        "measured as ivf/ivfpq index build+query rows in "
-        "SCALE_STEP_100X.json)",
-        "multimodal_ops": "2.40-2.80 s across r9 runs vs r8's 3.59 — "
-        "window-consistent, no media code change this round",
-    }
-    # Cross-window comparability (r12 verdict item: the committed r12
-    # artifacts sat in a window whose own fixed-work calibration ran
-    # 1.7x slower than r11's, which made 31/32 untouched queries read
-    # as regressed). Normalize per-query seconds by THIS run's cal32
-    # against the r11 reference window (2.9 s): sec / (cal32 / 2.9).
-    # The raw numbers stay the artifact of record; the normalized table
-    # is the window-drift-corrected view for round-over-round deltas.
-    _CAL32_REF = 2.9
-    cal32_now = (gate_before["cal32_s"] + gate_after["cal32_s"]) / 2.0
-    cal_factor = cal32_now / _CAL32_REF if cal32_now > 0 else 1.0
-    norm = {
-        k: round(v / cal_factor, 3) for k, v in times.items()
-    }
+    # Full detail goes to a sidecar file; stdout keeps only the last
+    # ~2,000 chars, so the final line is a compact JSON that fits.
     detail = {
         "metric": "headline_queries_total_runtime",
-        "notes": notes,
-        "value": round(total + setup_total + fixture_setup_s, 3),
+        "value": value,
         "unit": "sec",
         "queries": times,
-        "queries_cal32_normalized": norm,
-        "cal32_norm": {
-            "reference_cal32_s": _CAL32_REF,
-            "run_cal32_s": round(cal32_now, 3),
-            "divide_raw_seconds_by": round(cal_factor, 4),
-        },
         "setup": setups,
-        "setup_total_s": round(setup_total, 3),
-        "query_total_s": round(total, 3),
+        "action": actions,
+        "setup_total_s": setup_total,
+        "action_total_s": action_total,
         "fixture_setup_s": fixture_setup_s,
         "sf": float(sf),
-        "scale_step_sf1": scale_step,
         "extras": extras,
-        "host_gate": host_gate,
     }
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
@@ -447,11 +279,11 @@ def main() -> None:
 
     compact = {
         "metric": "headline_queries_total_runtime",
-        "value": round(total + setup_total + fixture_setup_s, 3),
+        "value": value,
         "unit": "sec",
         "queries": times,
-        "setup_total_s": round(setup_total, 3),
-        "query_total_s": round(total, 3),
+        "setup_total_s": setup_total,
+        "action_total_s": action_total,
         "fixture_setup_s": fixture_setup_s,
         "sf": float(sf),
         "detail": "BENCH_DETAIL.json",

@@ -264,3 +264,69 @@ def test_quant_cache_is_immutable_and_hits():
     assert not a[0].flags.writeable and not a[1].flags.writeable
     with pytest.raises(ValueError):
         a[0][0, 0] = 99
+
+
+# sha256 prefixes of the decoded pixels, recorded with the decoder before
+# its bit accumulator was trimmed: the trim must not change a single pixel
+_DECODE_DIGESTS = {
+    "smooth40x56_q50": "c1bcc6fbc1ee5563",
+    "smooth40x56_q85": "571daeb4fc23a9f9",
+    "smooth40x56_q95": "150761ee7c6c8194",
+    "smooth40x56_q85_420": "7238e57ce8987ddc",
+    "smooth33x13_q85_420": "2f63b2a6dd72387f",
+    "smooth33x13_q85": "242b4844ef7ff0ec",
+    "gray24x24_q85": "e2c1a9a6f3783e55",
+    "smooth24x40_q85": "5df657d8b7170bff",
+    "smooth16x16_q85": "df5f0ddeb25f72a8",
+    "smooth16x24_q80": "e32fc4de524dad65",
+    "random48x64_q90": "72ae9d273fae0ba1",
+}
+
+
+def _digest_cases():
+    s3 = _smooth_img(40, 56, seed=3)
+    for q in (50, 85, 95):
+        yield f"smooth40x56_q{q}", s3, q, "444"
+    yield "smooth40x56_q85_420", s3, 85, "420"
+    yield "smooth33x13_q85_420", s3[:33, :13], 85, "420"
+    yield "smooth33x13_q85", _smooth_img(33, 13, seed=5), 85, "444"
+    yield "gray24x24_q85", _smooth_img(24, 24, seed=7)[:, :, 0], 85, "444"
+    yield "smooth24x40_q85", _smooth_img(24, 40, seed=11), 85, "444"
+    yield "smooth16x16_q85", _smooth_img(16, 16, seed=2), 85, "444"
+    yield "smooth16x24_q80", _smooth_img(16, 24, seed=1), 80, "444"
+    yield "random48x64_q90", _random_img(48, 64, seed=90), 90, "444"
+
+
+def _random_img(h: int, w: int, seed: int) -> np.ndarray:
+    return np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
+
+
+def test_jpeg_decode_pixels_bit_identical():
+    import hashlib
+
+    got = {
+        name: hashlib.sha256(
+            decode_jpeg(encode_jpeg(img, q, subsampling=ss)).tobytes()
+        ).hexdigest()[:16]
+        for name, img, q, ss in _digest_cases()
+    }
+    assert got == _DECODE_DIGESTS
+
+
+def test_jpeg_decode_cost_linear_in_scan():
+    """Decode time must be linear in the scan: 4x the entropy-coded
+    bytes may cost at most 6x the time. Random q90 content keeps the
+    scan near-incompressible, so 4x the pixels is ~4x the scan; a bit
+    reader whose accumulator grows with the scan measures ~11x here."""
+    import time
+
+    small = encode_jpeg(_random_img(64, 96, seed=7), 90)
+    large = encode_jpeg(_random_img(128, 192, seed=7), 90)
+    assert 3.5 <= len(large) / len(small) <= 4.5
+    best = {"small": float("inf"), "large": float("inf")}
+    for _ in range(5):
+        for name, payload in (("small", small), ("large", large)):
+            t0 = time.perf_counter()
+            decode_jpeg(payload)
+            best[name] = min(best[name], time.perf_counter() - t0)
+    assert best["large"] / best["small"] <= 6.0, best

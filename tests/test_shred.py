@@ -124,3 +124,33 @@ def test_backfill_student_counts(spark):
     got = {(r.entity_name, r.number_of_students) for r in backfill_student_counts(docs).collect()}
     # min positive count across lessons naming the own group (25 < 28)
     assert got == {("253501", 25)}
+
+
+def _count_expressions(plan, class_name: str) -> int:
+    """Occurrences of a Catalyst expression class anywhere in a plan."""
+
+    def items(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    n = 0
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        exprs = list(items(node.expressions()))
+        while exprs:
+            e = exprs.pop()
+            n += e.getClass().getSimpleName() == class_name
+            exprs.extend(items(e.children()))
+        nodes.extend(items(node.children()))
+    return n
+
+
+def test_shred_plan_parses_json_once(spark):
+    """The parse barrier in ``parse_schedule_json`` keeps the optimizer
+    from cloning ``from_json`` into every field extractor: the shred plan
+    holds exactly one JsonToStructs, i.e. one JSON parse per row."""
+    docs, _ = _docs_df(spark)
+    plan = shred_schedule_docs(docs)._jdf.queryExecution().optimizedPlan()
+    assert _count_expressions(plan, "JsonToStructs") == 1

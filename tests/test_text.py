@@ -746,6 +746,38 @@ def test_repetition_no_phantom_tokens_from_edge_whitespace(spark):
     assert rows[2]["top_frac_q6"] == round(6 / 11 * 1e6)
 
 
+def test_repetition_metrics_quotes_text_column_name(spark):
+    # the text column name goes into a SQL string; a name with a space
+    # must be quoted there and give the same metrics as under `text`
+    import pandas as pd
+
+    from uma_etl_iis_loader_spark.operators.repetition import (
+        repetition_metrics,
+    )
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": ["buy now " * 6, "a b c d e a b c d e tail", None],
+        }
+    )
+    plain = repetition_metrics(spark.createDataFrame(pdf)).collect()
+    spaced = repetition_metrics(
+        spark.createDataFrame(pdf.rename(columns={"text": "body text"})),
+        text_col="body text",
+    ).collect()
+    assert len(plain) == 2
+    assert sorted(spaced) == sorted(plain)
+
+
+def test_quote_ident_doubles_backticks():
+    from uma_etl_iis_loader_spark.functions.text import quote_ident
+
+    assert quote_ident("text") == "`text`"
+    assert quote_ident("body text") == "`body text`"
+    assert quote_ident("a`b") == "`a``b`"
+
+
 # --- URL canonicalization ---
 
 

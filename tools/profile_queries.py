@@ -1,7 +1,7 @@
 """Per-query measurement harness for the optimization rounds (guide §1).
 
-Mirrors bench.py's methodology exactly (same session, same warm-up, same
-fixture materialization, same fn()+count split) but adds, per query:
+Uses bench.py's methodology (same session, ``bench.warm_up``, same
+fixture materialization, same fn()+count split) and adds, per query:
 
 - ``--explain DIR``: write ``DIR/<query>_<tag>.txt`` with the
   ``explain("formatted")`` of the returned frame (plan evidence for
@@ -29,9 +29,6 @@ import pstats
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution under
-                     # `from __future__ import annotations` needs pd in globals
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -46,7 +43,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    import bench  # reuse HEADLINE + the warm-up by calling its pieces
+    import bench  # HEADLINE and warm_up
 
     from uma_etl_iis_loader_spark.plans.registry import QUERIES
     from uma_etl_iis_loader_spark.session import build_session
@@ -56,7 +53,7 @@ def main() -> None:
 
     spark = build_session("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    _warmup(spark, sf_dir)
+    bench.warm_up(spark, sf_dir)
 
     from uma_etl_iis_loader_spark.plans.fixtures import materialize_schedule_fixture
 
@@ -103,124 +100,6 @@ def main() -> None:
                 f"sum={t1 - t0 + t3 - t2:7.3f}",
                 flush=True,
             )
-
-
-def _warmup(spark, sf_dir: str) -> None:
-    """The exact warm-up block from bench.py main() (kept in lockstep —
-    measurement parity matters more than DRY here; bench.py is the
-    driver-contract artifact and stays self-contained)."""
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    for fname in sorted(os.listdir(sf_dir)):
-        if fname.endswith(".parquet"):
-            with open(os.path.join(sf_dir, fname), "rb") as fh:
-                while fh.read(1 << 22):
-                    pass
-
-    r = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    r.alias("a").join(r.alias("b"), "r_regionkey").groupBy(
-        _F.col("a.r_name")
-    ).count().collect()
-
-    @_F.pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    r.select(_warm(_F.col("r_regionkey").cast("long"))).collect()
-    r.groupBy("r_regionkey").applyInPandas(
-        lambda pdf: pdf[["r_regionkey"]], "r_regionkey long"
-    ).count()
-
-    d = spark.range(0, 200_000).select(
-        "id",
-        (_F.col("id") % 1000).alias("k"),
-        _F.sequence(_F.lit(1), (_F.col("id") % 3 + 1).cast("int")).alias("arr"),
-    )
-    small = spark.range(0, 1000).select(
-        _F.col("id").alias("k"), _F.concat(_F.lit("n"), "id").alias("name")
-    )
-    warm = (
-        d.select("id", "k", _F.explode("arr").alias("e"))
-        .join(_F.broadcast(small), "k")
-        .groupBy("k", "e")
-        .agg(
-            _F.array_sort(_F.collect_set("name")).alias("s"),
-            _F.sum("id").alias("t"),
-        )
-    )
-    warm.select(
-        "k",
-        "e",
-        _F.row_number().over(_W.partitionBy("e").orderBy(_F.desc("t"))).alias("rn"),
-    ).filter("rn <= 5").count()
-
-    s2 = spark.range(0, 50_000).select(
-        "id",
-        (_F.col("id") % 500).alias("g"),
-        _F.concat(_F.lit("s"), (_F.col("id") % 97).cast("string")).alias("nm"),
-    )
-    agg2 = s2.groupBy("g").agg(
-        _F.array_sort(_F.collect_set("nm")).alias("names"),
-        _F.collect_list(_F.struct("id", "nm")).alias("structs"),
-    )
-    ex = agg2.select(
-        "g", _F.explode(_F.sequence(_F.lit(1), _F.lit(3))).alias("w"), "names"
-    ).select("g", "w", _F.explode("names").alias("nm"))
-    dim2 = s2.select(
-        _F.col("nm").alias("name"), (_F.col("id") % 777).alias("aid")
-    ).dropDuplicates(["name"])
-    (
-        ex.join(_F.broadcast(dim2), ex["nm"] == dim2["name"])
-        .groupBy("w", "aid")
-        .agg(_F.array_sort(_F.collect_set(_F.col("g").cast("string"))).alias("gs"))
-        .select(_F.array_join("gs", "|"))
-        .count()
-    )
-
-    s3 = spark.range(0, 100_000).select(
-        _F.concat(
-            _F.lit("Doc Text "), "id", _F.lit(" filler!? WORDS here")
-        ).alias("t")
-    )
-    s3.select(
-        _F.md5(
-            _F.trim(_F.regexp_replace(_F.lower("t"), r"[^a-z0-9]+", " "))
-        ).alias("fp"),
-        _F.xxhash64("t").alias("h"),
-    ).groupBy("fp").agg(_F.min("h")).count()
-
-    # r12 additions (kept in lockstep with bench.py): json round-trip,
-    # full-outer keyed merge, binary Arrow kernel, WITH-CTE shape
-    s4 = spark.range(0, 20_000)
-    (
-        s4.select(_F.to_json(_F.struct("id")).alias("js"))
-        .select(_F.from_json("js", "struct<id:bigint>").alias("p"))
-        .select("p.id")
-        .count()
-    )
-    a4 = s4.select(_F.col("id").alias("k"), (_F.col("id") * 2).alias("v"))
-    b4 = s4.select((_F.col("id") + 10_000).alias("k"), _F.col("id").alias("v2"))
-    (
-        a4.join(b4, "k", "full_outer")
-        .select(_F.coalesce("v", "v2").alias("m"))
-        .count()
-    )
-
-    def _bin_kernel(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"n": pdf["b"].map(len)})
-
-    (
-        s4.select(_F.col("id").cast("string").cast("binary").alias("b"))
-        .mapInPandas(_bin_kernel, "n long")
-        .count()
-    )
-    spark.sql(
-        "WITH t AS (SELECT id, id % 7 AS k FROM range(10000)), "
-        "u AS (SELECT k, sum(id) AS s FROM t GROUP BY k) "
-        "SELECT max(s) FROM u"
-    ).count()
 
 
 if __name__ == "__main__":

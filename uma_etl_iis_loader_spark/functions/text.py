@@ -213,6 +213,13 @@ def word_window_array(words: Column | str, n: int, sep: str = " ") -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def quote_ident(name: str) -> str:
+    """A column name as a SQL identifier: wrapped in backticks, any
+    inner backtick doubled, so names with spaces, dots or backticks
+    survive being put into a SQL string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def words_sql(src_sql: str) -> str:
     """The gram family's shared tokenization as a SQL expression string:
     lowercased whitespace tokens, empty tokens filtered."""

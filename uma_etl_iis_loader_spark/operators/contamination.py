@@ -50,12 +50,12 @@ def ngram_contamination(
     Docs with fewer than ``n`` words emit (0, 0) — present in the output,
     trivially uncontaminated.
     """
-    from ..functions.text import _word_gram_sql
+    from ..functions.text import _word_gram_sql, quote_ident
 
     # ONE WITH-CTE statement = one parse/analysis (each DataFrame op on
     # these gram-explode plans costs ~20-45 ms of driver time — the r12
     # pagerank finding applied to the whole gram family)
-    grams = _word_gram_sql(f"`{text_col}`", n)
+    grams = _word_gram_sql(quote_ident(text_col), n)
     sql = (
         "WITH tg AS (SELECT DISTINCT xxhash64(gram) AS gh FROM "
         f"(SELECT explode(array_distinct({grams})) AS gram FROM {{train}})),\n"
@@ -63,7 +63,7 @@ def ngram_contamination(
         # NULL (never-matching) key for the no-grams placeholder row, so
         # short docs survive the left join without a spurious hash hit
         "CASE WHEN gram IS NOT NULL THEN xxhash64(gram) END AS gh FROM "
-        f"(SELECT `{id_col}` AS doc_id, "
+        f"(SELECT {quote_ident(id_col)} AS doc_id, "
         f"explode_outer(array_distinct({grams})) AS gram FROM {{eval}}))\n"
         "SELECT e.doc_id, "
         "sum(CASE WHEN e.gh IS NOT NULL THEN 1 ELSE 0 END) AS n_ngrams, "
@@ -109,8 +109,9 @@ def strike_contaminated_spans(
     indexes (a bounded explode — no range join); the struck-index set
     anti-joins the word rows; rebuild is one partial-agg'able
     sort-struct collect per doc. No driver participation."""
-    from ..functions.text import word_window_array_sql
+    from ..functions.text import quote_ident, word_window_array_sql
 
+    id_q, text_q = quote_ident(id_col), quote_ident(text_col)
     # ONE WITH-CTE statement = one parse/analysis (see
     # ngram_contamination). Structure is the r12 DataFrame chain
     # verbatim: tokenize-once projection barriers (__wds/__lw column
@@ -122,15 +123,15 @@ def strike_contaminated_spans(
     )
     tok = (
         "SELECT __id, __wds, transform(__wds, w -> lower(w)) AS __lw "
-        "FROM (SELECT `{id}` AS __id, "
-        "filter(split(`{text}`, '\\\\s+'), w -> w != '') AS __wds "
-        "FROM {rel} WHERE `{text}` IS NOT NULL)"
+        "FROM (SELECT {id} AS __id, "
+        "filter(split({text}, '\\\\s+'), w -> w != '') AS __wds "
+        "FROM {rel} WHERE {text} IS NOT NULL)"
     )
     sql = (
         "WITH t_tok AS ("
-        + tok.format(id=id_col, text=text_col, rel="{train}")
+        + tok.format(id=id_q, text=text_q, rel="{train}")
         + "),\ne_tok AS ("
-        + tok.format(id=id_col, text=text_col, rel="{eval}")
+        + tok.format(id=id_q, text=text_q, rel="{eval}")
         + "),\n"
         # train words with positions (original case preserved for rebuild)
         "t_words AS (SELECT __id, i, w FROM t_tok "
@@ -157,8 +158,8 @@ def strike_contaminated_spans(
         "FROM kept GROUP BY __id)\n"
         # anchor on the train-id universe: a fully-struck doc has NO
         # kept rows and would otherwise vanish instead of returning ''
-        f"SELECT b.__id AS `{id_col}`, "
-        f"coalesce(r.__text, '') AS `{text_col}`, b.n_words, "
+        f"SELECT b.__id AS {id_q}, "
+        f"coalesce(r.__text, '') AS {text_q}, b.n_words, "
         "b.n_words - coalesce(r.n_kept, 0) AS n_words_struck, "
         "CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits "
         "FROM (SELECT __id, CAST(size(__wds) AS BIGINT) AS n_words "

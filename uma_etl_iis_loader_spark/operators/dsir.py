@@ -63,13 +63,14 @@ def _gram_rows_sql(id_col: str, text_col: str, rel: str) -> str:
     split+filter chain materializes per row; downstream references see
     the ``__w`` attribute (re-inlining it per element is the measured
     5-10x gram-explode trap)."""
-    from ..functions.text import word_window_array_sql, words_sql
+    from ..functions.text import quote_ident, word_window_array_sql, words_sql
 
+    text = quote_ident(text_col)
     return (
         f"SELECT id, explode(concat(__w, "
         f"{word_window_array_sql('__w', 2)})) AS gram "
-        f"FROM (SELECT `{id_col}` AS id, {words_sql(f'`{text_col}`')} "
-        f"AS __w FROM {rel} WHERE `{text_col}` IS NOT NULL)"
+        f"FROM (SELECT {quote_ident(id_col)} AS id, {words_sql(text)} "
+        f"AS __w FROM {rel} WHERE {text} IS NOT NULL)"
     )
 
 

@@ -388,14 +388,17 @@ def bloom_semi_filter(
             F.lit(num_hashes).cast("int").alias("__bloom_nh"),
         )
     f = probe.crossJoin(F.broadcast(b))
+    from ..functions.text import quote_ident
+
+    key = quote_ident(key_col)
     # one bit test per seed; seeds are INT (matching build_bloom's
     # explode(sequence(...)) seed type so xxhash64 agrees bit-for-bit)
     member = F.expr(
         f"forall(sequence(0, __bloom_nh - 1), i -> "
         f"(element_at(__bloom_bits, "
-        f"CAST(pmod(xxhash64(`{key_col}`, i), __bloom_nbits) DIV 64 AS INT) + 1) & "
+        f"CAST(pmod(xxhash64({key}, i), __bloom_nbits) DIV 64 AS INT) + 1) & "
         f"shiftleft(CAST(1 AS BIGINT), "
-        f"CAST(pmod(xxhash64(`{key_col}`, i), __bloom_nbits) % 64 AS INT))) != 0)"
+        f"CAST(pmod(xxhash64({key}, i), __bloom_nbits) % 64 AS INT))) != 0)"
     )
     return f.filter(F.col(key_col).isNull() | member).drop(
         "__bloom_bits", "__bloom_nbits", "__bloom_nh"

@@ -660,7 +660,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     # `dbits - (fed - nacc)` is exactly the real bits still unconsumed;
     # any symbol/amplitude that would consume past that is the old
     # reader's "exhausted" error, and an all-gap 16-bit window with real
-    # bits left is its "invalid code" error.
+    # bits left is its "invalid code" error. Every refill happens with
+    # nacc < 16, so `acc & 0xFFFF` keeps all live bits and drops the
+    # consumed ones: acc stays under 24 bits and decode is linear in the
+    # scan (an untrimmed acc grows with the scan and makes every shift
+    # copy it, i.e. quadratic time).
     mcu = 0
     for interval in intervals:
         if mcu >= n_mcus:
@@ -688,10 +692,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         # --- DC symbol
                         while nacc < 16:
                             if pos < dlen:
-                                acc = (acc << 8) | data[pos]
+                                acc = ((acc & 0xFFFF) << 8) | data[pos]
                                 pos += 1
                             else:
-                                acc <<= 8
+                                acc = (acc & 0xFFFF) << 8
                             fed += 8
                             nacc += 8
                         e = dc_lut[(acc >> (nacc - 16)) & 0xFFFF]
@@ -712,10 +716,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         if cat:
                             while nacc < cat:
                                 if pos < dlen:
-                                    acc = (acc << 8) | data[pos]
+                                    acc = ((acc & 0xFFFF) << 8) | data[pos]
                                     pos += 1
                                 else:
-                                    acc <<= 8
+                                    acc = (acc & 0xFFFF) << 8
                                 fed += 8
                                 nacc += 8
                             if cat > dbits - (fed - nacc):
@@ -735,10 +739,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                             # --- AC symbol
                             while nacc < 16:
                                 if pos < dlen:
-                                    acc = (acc << 8) | data[pos]
+                                    acc = ((acc & 0xFFFF) << 8) | data[pos]
                                     pos += 1
                                 else:
-                                    acc <<= 8
+                                    acc = (acc & 0xFFFF) << 8
                                 fed += 8
                                 nacc += 8
                             e = ac_lut[(acc >> (nacc - 16)) & 0xFFFF]
@@ -772,10 +776,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                             if cat:
                                 while nacc < cat:
                                     if pos < dlen:
-                                        acc = (acc << 8) | data[pos]
+                                        acc = ((acc & 0xFFFF) << 8) | data[pos]
                                         pos += 1
                                     else:
-                                        acc <<= 8
+                                        acc = (acc & 0xFFFF) << 8
                                     fed += 8
                                     nacc += 8
                                 if cat > dbits - (fed - nacc):

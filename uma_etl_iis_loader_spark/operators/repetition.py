@@ -58,7 +58,9 @@ def repetition_metrics(
     # SQL-string form of the same expression (NOT lowercased — this
     # operator's documented tokenization): routes the window builders
     # through the gram family's one-call construction path
-    words = f"filter(split({text_col}, '\\\\s+'), w -> w != '')"
+    from ..functions.text import quote_ident
+
+    words = f"filter(split({quote_ident(text_col)}, '\\\\s+'), w -> w != '')"
     base = docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id"),
         F.length(text_col).cast("long").alias("n_chars"),
